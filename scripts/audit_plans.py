@@ -92,6 +92,8 @@ def main() -> None:
         [
             ("broadcast enrich (no SortMergeJoin)", lambda p: "SortMergeJoin" not in p),
             (">=2 BroadcastHashJoin", lambda p: p.count("BroadcastHashJoin") >= 2),
+            ("no Scan ExistingRDD (dims are local relations)",
+             lambda p: "Scan ExistingRDD" not in p),
             ("sort is within partitions (no global Sort exchange after repartition)",
              lambda p: "rangepartitioning" not in p.lower()),
         ],
@@ -233,6 +235,8 @@ def main() -> None:
                  r"Exchange (hash|range|SinglePartition|RoundRobin)", p)),
             ("broadcast enrich still present",
              lambda p: "BroadcastHashJoin" in p),
+            ("no Scan ExistingRDD (dims are local relations)",
+             lambda p: "Scan ExistingRDD" not in p),
         ],
         out,
         "conv_id-bucketed input (Iceberg bucket-transform layout): the "
@@ -3308,9 +3312,8 @@ def main() -> None:
              lambda p: p.count("BroadcastHashJoin") >= 5),
             ("no SortMergeJoin / no theta range join",
              lambda p: "SortMergeJoin" not in p),
-            ("no Python EVAL in plan (the only 'Python' mention is the "
-             "5-row dim's createDataFrame RDD)",
-             lambda p: "EvalPython" not in p and "InPandas" not in p),
+            ("no Python in plan (the 5-row dim is a local relation)",
+             lambda p: "Python" not in p),
         ],
         out,
         "fact side never shuffles for the lookup; the only exchange is "
@@ -3673,8 +3676,8 @@ def main() -> None:
         ("hash_tf_probe_cosine",
          [("tokenize is Generate; probe joins broadcast",
            lambda p: "Generate" in p and "Broadcast" in p),
-          ("no Python EVAL in plan (probe createDataFrame RDD only)",
-           lambda p: "EvalPython" not in p and "InPandas" not in p)], ""),
+          ("no Python in plan (the probe is a local relation)",
+           lambda p: "Python" not in p)], ""),
         ("calinski_harabasz",
          [("W folds via compiled-centroid row expressions (no point join)",
            lambda p: "SortMergeJoin" not in p),

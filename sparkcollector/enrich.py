@@ -8,15 +8,22 @@ dims (reference: pkg/receiver/smartagentreceiver/output.go:256-259,
 
 Spark-first equivalent (SURVEY.md §2.5): keep the lookup tables tiny
 and **broadcast** them, so the join is map-side with zero shuffle on
-the 100 TB fact side.  The dimension-update side channel
+the 100 TB fact side.  The role and tool dimensions are in-memory local
+relations (:func:`local_table`, a ``VALUES`` inline table): each plans
+as a ``LocalTableScan``, so its broadcast is built in the JVM and no
+Python worker runs for it.  The dimension-update side channel
 (dimension.go:29-60, SCD upserts) is modeled by
 :func:`apply_dim_updates`, the MERGE-INTO analog.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 # FIXTURES.md §2/§3 lookup contents (deterministic fixtures).
@@ -26,7 +33,7 @@ ROLE_ATTRS = [
     ("system", "orchestrator", 3, "platform"),
     ("tool", "plugin", 0, "plugins"),
 ]
-ROLE_ATTRS_COLS = ["role", "actor_kind", "priority", "team"]
+ROLE_ATTRS_SCHEMA = "role string, actor_kind string, priority bigint, team string"
 
 TOOL_ATTRS = [
     ("bash", "exec", "high"),
@@ -35,30 +42,48 @@ TOOL_ATTRS = [
     ("search", "net", "medium"),
     ("none", "noop", "low"),
 ]
-TOOL_ATTRS_COLS = ["tool", "tool_category", "risk_level"]
+TOOL_ATTRS_SCHEMA = "tool string, tool_category string, risk_level string"
 
 
-def role_attrs_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_ATTRS, ROLE_ATTRS_COLS)
-
-
-def tool_attrs_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_ATTRS, TOOL_ATTRS_COLS)
-
-
-def enrich_turns(
-    df: DataFrame,
-    role_attrs: DataFrame | None = None,
-    tool_attrs: DataFrame | None = None,
+def local_table(
+    spark: SparkSession, rows: Sequence[Sequence[Any]], schema: str
 ) -> DataFrame:
+    """A small constant table as an in-memory local relation.
+
+    ``spark.createDataFrame(list)`` plans as ``Scan ExistingRDD`` over
+    a pickled Python RDD, so every job that reads it (a broadcast
+    build, a collect) launches Python workers.  This builds a
+    SQL ``VALUES`` inline table instead: each cell is a bound named
+    parameter cast to its ``schema`` (DDL string) type, so the table
+    folds to a ``LocalRelation`` and plans as ``LocalTableScan`` —
+    JVM-only, independent of the Arrow setting.  Named markers rather
+    than ``?``: positional markers bind out of order inside ``VALUES``
+    on Spark 4.1.
+    """
+    fields = StructType.fromDDL(schema).fields
+    args: dict[str, Any] = {}
+    tuples = []
+    for i, row in enumerate(rows):
+        cells = []
+        for j, (f, v) in enumerate(zip(fields, row, strict=True)):
+            args[f"v{i}_{j}"] = v
+            cells.append(f"CAST(:v{i}_{j} AS {f.dataType.simpleString()})")
+        tuples.append(f"({', '.join(cells)})")
+    names = ", ".join(f"`{f.name}`" for f in fields)
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})", args=args
+    )
+
+
+def enrich_turns(df: DataFrame) -> DataFrame:
     """Broadcast-join role and tool dimension attributes onto turns.
 
     Left joins: an unknown role/tool yields NULL attrs rather than
     dropping the row (the collector never drops on missing metadata).
     """
     spark = df.sparkSession
-    role_attrs = role_attrs if role_attrs is not None else role_attrs_df(spark)
-    tool_attrs = tool_attrs if tool_attrs is not None else tool_attrs_df(spark)
+    role_attrs = local_table(spark, ROLE_ATTRS, ROLE_ATTRS_SCHEMA)
+    tool_attrs = local_table(spark, TOOL_ATTRS, TOOL_ATTRS_SCHEMA)
     return df.join(F.broadcast(role_attrs), "role", "left").join(
         F.broadcast(tool_attrs), "tool", "left"
     )

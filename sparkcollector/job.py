@@ -9,7 +9,8 @@ entrypoint:
     spark-submit --master <cluster> --py-files sparkcollector.zip \
         -m sparkcollector.job --input <transcripts> --out <dir>
 
-Phases (each timed; metrics land in the output snapshot log):
+Phases (one plan; Catalyst pipelines them, so they are not timed
+one by one):
   1. scan       parquet/snapshot-catalog read of transcripts
   2. parse      vectorized regex extraction (parse.py)
   3. enrich     broadcast role/tool lookups (enrich.py)
@@ -17,6 +18,14 @@ Phases (each timed; metrics land in the output snapshot log):
   5. order      repartition(conv_id) + sortWithinPartitions(conv_id,
                 turn_idx) — stable turn ordering before writes
   6. write      fan-out sink writes + agg_counts table
+
+What ``run_pipeline`` records (its return value, the CLI's JSON line):
+``route_sec`` (call start until the routed rows are written, or
+counted with ``--no-write``), ``total_sec`` (the whole call, so it
+adds the agg_counts aggregate), ``turns``/``turns_per_sec``, and
+``sink_<name>_rows`` per sink from the written files.  Each snapshot
+commit also logs its own ``write_sec`` (the routed write, which runs
+phases 1-6 except the agg_counts table).
 """
 
 from __future__ import annotations

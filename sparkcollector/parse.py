@@ -73,11 +73,17 @@ def _severity_map_expr(raw: Column) -> Column:
 
 @pandas_udf(PARSED_STRUCT)
 def _parse_udf(text: pd.Series) -> pd.DataFrame:
-    """All extractions in one Arrow batch pass."""
-    sev_re = re.compile(SEVERITY_RE)
-    call_re = re.compile(CALL_RE)
-    span_re = re.compile(SPAN_RE)
-    lts_re = re.compile(LOG_TS_RE)
+    """All extractions in one Arrow batch pass.
+
+    ``re.ASCII``: Python's ``\\w``/``\\d`` are Unicode-aware by default,
+    Java's (:func:`parse_turns_builtin`) and RE2's (the DuckDB oracle)
+    are ASCII-only; without the flag ``CALL café(...)`` or ``dur=٣٤ms``
+    would parse here and nowhere else.
+    """
+    sev_re = re.compile(SEVERITY_RE, re.ASCII)
+    call_re = re.compile(CALL_RE, re.ASCII)
+    span_re = re.compile(SPAN_RE, re.ASCII)
+    lts_re = re.compile(LOG_TS_RE, re.ASCII)
 
     sev_raw = text.str.extract(sev_re, expand=False)
     severity = sev_raw.map(SEVERITY_MAP, na_action="ignore")

@@ -4,6 +4,8 @@ behaviors, re-expressed as broadcast joins / MERGE-INTO analog)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from sparkcollector.enrich import apply_dim_updates, enrich_turns
@@ -31,6 +33,24 @@ def test_enrich_plan_is_broadcast(turns_df):
     plan = enrich_turns(turns_df)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def _broadcast_sides(plan: str) -> list[str]:
+    """The node directly under each BroadcastExchange in a plan string."""
+    return re.findall(r"BroadcastExchange [^\n]*\n[ :|]*\+- (\w+)", plan)
+
+
+def test_enrich_dims_are_local_relations(turns_df):
+    """Both dimensions broadcast from an in-memory LocalTableScan: no
+    pickled-RDD scan, so no Python worker runs outside the parse."""
+    from sparkcollector.job import build_pipeline
+
+    for df in (enrich_turns(turns_df), build_pipeline(turns_df)):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]  # the AQE final plan
+        assert _broadcast_sides(plan) == ["LocalTableScan"] * 2, plan
+        assert "ExistingRDD" not in plan, plan
 
 
 def test_apply_dim_updates_upsert_remove_last_wins(spark):

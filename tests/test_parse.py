@@ -79,6 +79,31 @@ def test_severity_custom_mapping(spark):
     assert out == {0: "error", 1: "warn", 2: None}
 
 
+def test_non_ascii_text_parses_and_routes_like_builtin(spark):
+    """Python's Unicode ``\\w``/``\\d`` must not widen the patterns: on
+    non-ASCII text the pandas path extracts, and routes, exactly what
+    the Java-regex path (and the RE2 oracle) does."""
+    from sparkcollector.route import route
+
+    df = spark.createDataFrame(
+        [("a", 0, "tool", "CALL café(args=x) -> status=ok dur=5ms", "bash"),
+         ("a", 1, "tool", "CALL read(args=x) -> status=ok dur=٣٤ms", "read"),
+         ("a", 2, "tool", "span id=0123456789abcdef parent=- op=résumé", "none")],
+        ["conv_id", "turn_idx", "role", "text", "tool"],
+    ).withColumn("ts", F.current_timestamp())
+
+    def routed(parser):
+        out = route(parser(df)).select("turn_idx", *PARSED_COLS, "sink")
+        return sorted(out.collect())
+
+    got = routed(parse_turns)
+    assert got == routed(parse_turns_builtin)
+    assert got[0].tool_name is None and got[0].sink == "events"
+    assert got[1].tool_name is None and got[1].dur_ms is None
+    assert got[1].sink == "events"
+    assert got[2].span_op == "r" and got[2].sink == "traces"
+
+
 def test_log_ts_parsed(spark):
     df = spark.createDataFrame(
         [("a", 0, "x", "hit [02/Jan/2025:13:44:01 +0000] ok", "none")],
