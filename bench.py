@@ -105,8 +105,8 @@ def main() -> None:
     from sparkcollector.queries import transcripts_from_events
 
     # Warm up: run the full pipeline on a small slice first so JVM
-    # codegen, Python UDF workers, and broadcast machinery are hot —
-    # we measure steady-state throughput, not container cold start.
+    # codegen and broadcast machinery are hot — we measure
+    # steady-state throughput, not container cold start.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
     warm = count_connector(
         build_pipeline(transcripts_from_events(spark, sf_dir).limit(2000))
@@ -116,24 +116,13 @@ def main() -> None:
     timings: dict[str, float] = {}
 
     # -- e2e flagship pipeline: one pass, aggregate re-summed so every
-    #    stage (pandas-UDF parse, broadcast enrich, route, repartition+
+    #    stage (regexp_extract parse, broadcast enrich, route, repartition+
     #    sort, windowed grouped counts) actually executes.
     t0 = time.time()
     agg = count_connector(build_pipeline(transcripts_from_events(spark, sf_dir)))
     n_turns = int(agg.agg(F.sum("n").alias("t")).collect()[0]["t"])
     e2e = time.time() - t0
     timings["e2e_pipeline"] = round(e2e, 3)
-
-    # Comparison point: the pure-Catalyst regexp_extract parse path
-    # (JVM codegen) vs the pandas-UDF hot path above.
-    t0 = time.time()
-    agg_b = count_connector(
-        build_pipeline(
-            transcripts_from_events(spark, sf_dir), use_pandas_udf=False
-        )
-    )
-    agg_b.agg(F.sum("n")).collect()
-    timings["e2e_builtin_parse"] = round(time.time() - t0, 3)
 
     qs = registry()
     for name in HEADLINE:

@@ -94,6 +94,8 @@ def main() -> None:
             (">=2 BroadcastHashJoin", lambda p: p.count("BroadcastHashJoin") >= 2),
             ("no Scan ExistingRDD (dims are local relations)",
              lambda p: "Scan ExistingRDD" not in p),
+            ("no Python (Catalyst regexp_extract parse)",
+             lambda p: "EvalPython" not in p and "InPandas" not in p),
             ("sort is within partitions (no global Sort exchange after repartition)",
              lambda p: "rangepartitioning" not in p.lower()),
         ],
@@ -114,6 +116,8 @@ def main() -> None:
             ("partial aggregation present", lambda p: "partial_count" in p or "Partial" in p),
             ("no shuffle join (broadcast enrich only)",
              lambda p: "SortMergeJoin" not in p and "ShuffledHashJoin" not in p),
+            ("no Python (Catalyst regexp_extract parse)",
+             lambda p: "EvalPython" not in p and "InPandas" not in p),
         ],
         out,
     )
@@ -237,6 +241,8 @@ def main() -> None:
              lambda p: "BroadcastHashJoin" in p),
             ("no Scan ExistingRDD (dims are local relations)",
              lambda p: "Scan ExistingRDD" not in p),
+            ("no Python (Catalyst regexp_extract parse)",
+             lambda p: "EvalPython" not in p and "InPandas" not in p),
         ],
         out,
         "conv_id-bucketed input (Iceberg bucket-transform layout): the "

@@ -14,7 +14,7 @@ tests/general/splunk_platform_logs_test.go:56-105).
 Config shape (all keys optional; defaults = the north-rule pipeline)::
 
     pipeline:
-      parse: {engine: pandas}                  # pandas | builtin | off
+      parse: {engine: builtin}                 # builtin (Catalyst) | off
       exclude:                                  # filter processor (§2.4):
         - {column: role, items: ["!tool"]}      #   drop rows matching ANY
       enrich: {role_attrs: true, tool_attrs: true}
@@ -40,12 +40,12 @@ from pyspark.sql import functions as F
 
 from .enrich import enrich_turns
 from .filters import overridable_string_filter
-from .parse import parse_turns, parse_turns_builtin
+from .parse import parse_turns
 from .route import DEFAULT_RULES, RoutingRule, route
 
 DEFAULT_CONFIG: dict[str, Any] = {
     "pipeline": {
-        "parse": {"engine": "pandas"},
+        "parse": {"engine": "builtin"},
         "exclude": [],
         "enrich": {"role_attrs": True, "tool_attrs": True},
         "transform": [],
@@ -190,11 +190,9 @@ def compile_pipeline(
         drop = _exclude_predicate(cfg.get("exclude") or [])
         if drop is not None:
             df = df.filter(~drop)
-        engine = (cfg.get("parse") or {}).get("engine", "pandas")
-        if engine == "pandas":
+        engine = (cfg.get("parse") or {}).get("engine", "builtin")
+        if engine == "builtin":
             df = parse_turns(df)
-        elif engine == "builtin":
-            df = parse_turns_builtin(df)
         elif engine != "off":
             raise ValueError(f"unknown parse engine {engine!r}")
         en = cfg.get("enrich") or {}

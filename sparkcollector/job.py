@@ -12,7 +12,7 @@ entrypoint:
 Phases (one plan; Catalyst pipelines them, so they are not timed
 one by one):
   1. scan       parquet/snapshot-catalog read of transcripts
-  2. parse      vectorized regex extraction (parse.py)
+  2. parse      regexp_extract field extraction in Catalyst (parse.py)
   3. enrich     broadcast role/tool lookups (enrich.py)
   4. route      first-match-wins sink tagging (route.py)
   5. order      repartition(conv_id) + sortWithinPartitions(conv_id,
@@ -42,16 +42,14 @@ from .aggregate import count_connector
 from .catalog import make_catalog, table_uri
 from .checkpoint import SnapshotCatalog
 from .enrich import enrich_turns
-from .parse import parse_turns, parse_turns_builtin
+from .parse import parse_turns
 from .route import RoutingRule, SINK_PROJECTIONS, route
 from .session import get_spark
-from .skew import repartition_sorted
 
 
 def build_pipeline(
     turns: DataFrame,
     rules: list[RoutingRule] | None = None,
-    use_pandas_udf: bool = True,
     order_partitions: int | None = None,
     sort_prefix: tuple[str, ...] = (),
     prepartitioned: bool = False,
@@ -70,7 +68,6 @@ def build_pipeline(
     ordering guarantee is identical (hash(conv_id) % B task placement
     either way); only who does the hashing changes (the writer, once,
     vs every reader)."""
-    parser = parse_turns if use_pandas_udf else parse_turns_builtin
     # ONE exchange total (ZERO when prepartitioned): hash-repartition
     # the NARROW input by conv_id up front.  This simultaneously (a)
     # spreads a poorly-split small scan across every core for the
@@ -85,7 +82,7 @@ def build_pipeline(
         spread = turns.repartition(order_partitions, F.col("conv_id"))
     else:
         spread = turns.repartition(F.col("conv_id"))
-    parsed = parser(spread)
+    parsed = parse_turns(spread)
     enriched = enrich_turns(parsed)
     routed = route(enriched, rules)
     return routed.sortWithinPartitions(*sort_prefix, "conv_id", "turn_idx")
@@ -104,7 +101,6 @@ def run_pipeline(
     input_path: str | None,
     out_dir: str,
     rules: list[RoutingRule] | None = None,
-    use_pandas_udf: bool = True,
     write: bool = True,
     strategy: str = "partitioned",
     warmup: bool = False,
@@ -128,7 +124,7 @@ def run_pipeline(
 
     ``warmup`` runs the same plan on a small slice before the timer
     starts, so one-time driver costs (codegen + JIT compilation,
-    Python-UDF worker launch) are excluded and ``turns_per_sec``
+    broadcast setup) are excluded and ``turns_per_sec``
     reflects steady-state throughput — the regime that matters at
     10^12-turn scale, where planning amortizes to zero.
     """
@@ -143,7 +139,6 @@ def run_pipeline(
                 input_path,
                 wdir,
                 rules=rules,
-                use_pandas_udf=use_pandas_udf,
                 write=write,
                 strategy=strategy,
                 warmup=False,
@@ -207,12 +202,12 @@ def run_pipeline(
     if _limit:
         turns = turns.limit(_limit)
     # Lead the within-partition sort with the sink column when we'll
-    # write partitionBy("sink") — see repartition_sorted.sort_prefix.
+    # write partitionBy("sink"): the file writer then keeps the
+    # (conv_id, turn_idx) order instead of injecting its own sort.
     prefix = ("sink",) if (write and strategy == "partitioned") else ()
     routed = build_pipeline(
         turns,
         rules,
-        use_pandas_udf=use_pandas_udf,
         sort_prefix=prefix,
         prepartitioned=bool(bucketed_input) and not _limit,
     )
@@ -313,7 +308,6 @@ def main() -> None:
     p.add_argument("--limit", type=int, default=5, help="--run-query sample rows")
     p.add_argument("--out", help="output directory (required for pipeline runs)")
     p.add_argument("--master", default=None)
-    p.add_argument("--builtin-parse", action="store_true")
     p.add_argument("--no-write", action="store_true")
     p.add_argument(
         "--strategy", choices=["partitioned", "fanout"], default="partitioned"
@@ -355,7 +349,6 @@ def main() -> None:
         spark,
         args.input,
         args.out,
-        use_pandas_udf=not args.builtin_parse,
         write=not args.no_write,
         strategy=args.strategy,
         warmup=args.warmup,

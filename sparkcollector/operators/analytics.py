@@ -8533,9 +8533,11 @@ def huber_one_step(
 
 
 def count_distribution_diagnostics(
-    unit_counts: DataFrame,
+    nonzero_counts: DataFrame,
     group_col: str,
     count_col: str,
+    cell_totals: DataFrame,
+    total_col: str = "n_cells",
 ) -> DataFrame:
     """Poisson-ness diagnostics of per-unit event counts per group.
 
@@ -8543,63 +8545,27 @@ def count_distribution_diagnostics(
     check the three classic failure modes in ONE pass over the unit
     counts: overdispersion (variance/mean ratio and the implied
     negative-binomial size r = m^2/(v-m)), zero-inflation (observed
-    zero share vs the Poisson-expected e^-m — the caller must supply
-    a COMPLETE unit grid including zero-count units, or the zero
-    comparison is meaningless), and a dispersion summary.
+    zero share vs the Poisson-expected e^-m), and a dispersion
+    summary.
 
-    Shape: the input is already a per-unit count table (one upstream
-    shuffle); diagnostics fold from its power sums.
-
-    Returns per group: n_units, mean, var, dispersion_ratio,
-    nb_size_r (NULL when not overdispersed), zero_frac,
-    poisson_zero_frac (all round 6).
-    """
-    c = F.col(count_col).cast("double")
-    agg = unit_counts.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(c).alias("_s"),
-        F.sum(c * c).alias("_q"),
-        F.sum((c == 0).cast("int")).cast("double").alias("_z"),
-    )
-    n, s, q = F.col("_n"), F.col("_s"), F.col("_q")
-    m = s / n
-    v = (q - s * s / n) / (n - 1)
-    return agg.select(
-        group_col,
-        n.cast("long").alias("n_units"),
-        F.round(m, 6).alias("mean"),
-        F.round(v, 6).alias("var"),
-        F.round(v / m, 6).alias("dispersion_ratio"),
-        F.round(F.when(v > m, m * m / (v - m)), 6).alias("nb_size_r"),
-        F.round(F.col("_z") / n, 6).alias("zero_frac"),
-        F.round(F.exp(-m), 6).alias("poisson_zero_frac"),
-    )
-
-
-def count_distribution_diagnostics_sparse(
-    nonzero_counts: DataFrame,
-    group_col: str,
-    count_col: str,
-    cell_totals: DataFrame,
-    total_col: str = "n_cells",
-) -> DataFrame:
-    """Grid-free twin of :func:`count_distribution_diagnostics`.
-
-    The dense variant needs the caller to materialize the COMPLETE
-    unit grid (every (user, day) cell including zeros) — at 10^9
-    users x 10^3 days that is a 10^12-row crossJoin just to represent
-    zeros.  But zero cells are pure arithmetic: with ``n`` total
-    cells per group (supplied via ``cell_totals``; typically
-    n_units x n_buckets) and power sums over only the NONZERO cells
-    (zeros contribute exactly 0.0 to both s and q, and integer counts
-    sum exactly in doubles), the zero-cell count is
-    ``z = n - n_nonzero`` and every diagnostic follows from
-    (n, s, q, z) unchanged.  Same float arithmetic as the dense path
-    — identical output — with no grid and no left join.
+    Grid-free: the statistics are defined over the COMPLETE unit grid
+    (every (user, day) cell including zeros) — at 10^9 users x 10^3
+    days a 10^12-row crossJoin just to represent zeros.  But zero
+    cells are pure arithmetic: with ``n`` total cells per group
+    (supplied via ``cell_totals``; typically n_units x n_buckets) and
+    power sums over only the NONZERO cells (zeros contribute exactly
+    0.0 to both s and q, and integer counts sum exactly in doubles),
+    the zero-cell count is ``z = n - n_nonzero`` and every diagnostic
+    follows from (n, s, q, z) — the same float arithmetic as a fold
+    over the dense grid, with no grid and no left join.
 
     ``cell_totals``: per-group total cell counts (group_col,
     total_col); groups absent from ``nonzero_counts`` fold to
     all-zero cells.
+
+    Returns per group: n_units, mean, var, dispersion_ratio,
+    nb_size_r (NULL when not overdispersed), zero_frac,
+    poisson_zero_frac (all round 6).
     """
     c = F.col(count_col).cast("double")
     nz = nonzero_counts.groupBy(group_col).agg(
@@ -13006,10 +12972,12 @@ def theta_forecast(
 
 
 def croston_intermittent(
-    df: DataFrame,
+    demands: DataFrame,
     group_cols: list[str],
-    order_col: str,
+    pos_col: str,
     demand_col: str,
+    periods: DataFrame,
+    n_periods_col: str = "n_periods",
     alpha: float = 0.1,
 ) -> DataFrame:
     """Croston's method for INTERMITTENT demand (sparse counters with
@@ -13019,91 +12987,30 @@ def croston_intermittent(
     forecast rate = z/p, plus the Syntetos-Boylan (1-alpha/2)
     bias-corrected variant.
 
-    A genuinely sequential recurrence (state depends on the zero-run
-    structure), so per series it is a fold with the ``aggregate`` HOF
-    over the collected DENSE series — same bounded-series contract as
-    the repo's Kalman filter (rollup series, not raw events).
-    """
-    base = df.select(
-        *group_cols,
-        F.col(order_col).cast("long").alias("_o"),
-        F.col(demand_col).cast("double").alias("_d"),
-    )
-    ser = base.groupBy(*group_cols).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_o", "_d"))),
-            lambda e: e["_d"],
-        ).alias("_ds"),
-    )
-    a_ = alpha
-    fold = (
-        "aggregate(_ds,"
-        " named_struct('z', cast(0.0 as double), 'p',"
-        " cast(0.0 as double), 'q', cast(1.0 as double),"
-        " 'init', false, 'nd', cast(0 as bigint)),"
-        " (acc, d) -> case"
-        " when d > 0 and not acc.init then named_struct("
-        " 'z', d, 'p', acc.q, 'q', cast(1.0 as double),"
-        " 'init', true, 'nd', acc.nd + 1)"
-        " when d > 0 then named_struct("
-        f" 'z', acc.z + {a_} * (d - acc.z),"
-        f" 'p', acc.p + {a_} * (acc.q - acc.p),"
-        " 'q', cast(1.0 as double), 'init', true, 'nd', acc.nd + 1)"
-        " else named_struct('z', acc.z, 'p', acc.p,"
-        " 'q', acc.q + 1.0, 'init', acc.init, 'nd', acc.nd) end)"
-    )
-    folded = ser.withColumn("_st", F.expr(fold))
-    st = F.col("_st")
-    rate = st.getField("z") / st.getField("p")
-    return folded.select(
-        *group_cols,
-        F.size("_ds").cast("bigint").alias("n_periods"),
-        st.getField("nd").alias("demand_periods"),
-        F.when(st.getField("init"), F.round(st.getField("z"), 6))
-        .alias("z_hat"),
-        F.when(st.getField("init"), F.round(st.getField("p"), 6))
-        .alias("p_hat"),
-        F.when(st.getField("init"), F.round(rate, 6))
-        .alias("croston_rate"),
-        F.when(st.getField("init"), F.round((1 - a_ / 2) * rate, 6))
-        .alias("sba_rate"),
-    )
-
-
-def croston_intermittent_sparse(
-    demands: DataFrame,
-    group_cols: list[str],
-    pos_col: str,
-    demand_col: str,
-    periods: DataFrame,
-    n_periods_col: str = "n_periods",
-    alpha: float = 0.1,
-) -> DataFrame:
-    """Grid-free twin of :func:`croston_intermittent`.
-
-    The dense fold walks EVERY period of the zero-filled grid, but
-    Croston state only changes at demand points: zero periods leave
-    (z, p) untouched and merely advance the interval counter, which
-    at the next demand equals the integer position gap.  So folding
-    over just the nonzero demand points — each tagged with its
-    1-based rank ``pos_col`` in the full period sequence — replays
-    the dense recurrence with bit-identical float operations
-    (interval gaps are exact integer doubles), while the input
-    shrinks from |groups| x |periods| grid cells to the demand points
-    alone.  No crossJoin grid, no zero-fill join.
+    Grid-free: the textbook fold walks EVERY period of the
+    zero-filled series, but Croston state only changes at demand
+    points: zero periods leave (z, p) untouched and merely advance
+    the interval counter, which at the next demand equals the integer
+    position gap.  So folding over just the demand points (``d > 0``)
+    — each tagged with its 1-based rank ``pos_col`` in the full
+    period sequence — replays the dense recurrence with bit-identical
+    float operations (interval gaps are exact integer doubles), while
+    the input shrinks from |groups| x |periods| grid cells to the
+    demand points alone.  No crossJoin grid, no zero-fill join.
+    Rows with zero or negative demand may be passed; like zero
+    periods of the dense series they are not demand points.
 
     ``periods`` carries per-group ``n_periods_col`` (total period
     count); groups with no demand points emit NULL estimates, like
     the dense fold on an all-zero series.  Demand points per group
     are bounded by the intermittency contract (the method is FOR
-    sparse demand), so the collected fold stays bounded exactly as
-    the dense variant's bounded-series contract.
+    sparse demand), so the collected fold stays bounded.
     """
     base = demands.select(
         *group_cols,
         F.col(pos_col).cast("long").alias("_rn"),
         F.col(demand_col).cast("double").alias("_d"),
-    )
+    ).filter(F.col("_d") > 0)
     ser = base.groupBy(*group_cols).agg(
         F.array_sort(F.collect_list(F.struct("_rn", "_d"))).alias("_ps"),
     )
@@ -14708,8 +14615,10 @@ def binseg_changepoints(
 
 
 def zip_mom_fit(
-    df: DataFrame,
+    nonzero_counts: DataFrame,
     count_col: str,
+    totals: DataFrame,
+    total_col: str = "n_cells",
 ) -> DataFrame:
     """Zero-inflated Poisson method-of-moments fit over a count
     column: lambda = (var + mean^2 - mean)/mean, pi = 1 - mean/
@@ -14717,49 +14626,15 @@ def zip_mom_fit(
     'structurally inactive' population?  Emits the fit plus the
     model-vs-observed zero share (the diagnostic that justifies ZIP
     over plain Poisson).  One aggregate pass.
-    """
-    a = df.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg(F.col(count_col).cast("double")).alias("m"),
-        F.avg(
-            F.col(count_col).cast("double")
-            * F.col(count_col).cast("double")
-        ).alias("m2"),
-        F.avg(
-            (F.col(count_col) == 0).cast("double")
-        ).alias("p0_obs"),
-    )
-    var = F.col("m2") - F.col("m") * F.col("m")
-    lam = (var + F.col("m") * F.col("m") - F.col("m")) / F.col("m")
-    pi = 1 - F.col("m") / lam
-    p0_model = pi + (1 - pi) * F.exp(-lam)
-    return a.select(
-        F.col("n").cast("bigint").alias("n_obs"),
-        F.round("m", 6).alias("mean"),
-        F.round(var, 6).alias("var"),
-        F.round(lam, 6).alias("lambda_fit"),
-        F.round(pi, 6).alias("pi_zero_inflation"),
-        F.round("p0_obs", 6).alias("zero_share_observed"),
-        F.round(p0_model, 6).alias("zero_share_model"),
-    )
 
-
-def zip_mom_fit_sparse(
-    nonzero_counts: DataFrame,
-    count_col: str,
-    totals: DataFrame,
-    total_col: str = "n_cells",
-) -> DataFrame:
-    """Grid-free twin of :func:`zip_mom_fit`.
-
-    The dense variant averages over the COMPLETE zero-filled unit
+    Grid-free: the moments are over the COMPLETE zero-filled unit
     grid; but with ``n`` total cells known (a 1-row ``totals`` frame,
     typically n_units x n_buckets computed from two tiny distinct
     counts), every grid moment is arithmetic on the nonzero cells
     alone: mean = s/n, second moment = q/n, observed zero share =
     (n - n_nonzero)/n — integer count sums are exact in doubles, so
-    the output is float-identical to the dense path with no
-    |units| x |buckets| crossJoin.
+    the output is float-identical to averaging the dense grid, with
+    no |units| x |buckets| crossJoin.
     """
     k = F.col(count_col).cast("double")
     nz = nonzero_counts.agg(

@@ -419,12 +419,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Back-compat alias: the resize kernel is now real for images
-    (``resize_images``); the old truncate-bytes stub is gone."""
-    return resize_images(media, width, height)
-
-
 def frame_sample(
     media: DataFrame, every_ms: int = 1000
 ) -> DataFrame:
@@ -497,15 +491,6 @@ def frame_sample(
             )
 
     return media.filter("kind = 'video'").mapInPandas(run, schema=frame_schema)
-
-
-def frame_sample_stub(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Back-compat alias: the frame kernel is now real for Y4M video
-    (``frame_sample``); the old byte-slice stub survives only as the
-    in-kernel fallback for opaque compressed containers."""
-    return frame_sample(media, every_ms)
 
 
 def synth_media(spark, n: int = 64, seed: int = 3) -> DataFrame:

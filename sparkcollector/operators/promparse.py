@@ -1558,23 +1558,23 @@ def xmlkv_parse(
 ) -> DataFrame:
     """XML event parse (Splunk ``xmlkv`` analog), vectorized.
 
-    The JVM XPath twin (:func:`xmlkv_parse_xpath`) pays one DOM build
-    per row even after the round-4 single-concat fix — ~22 s per
-    100k-row scan, 10x the rest of the parse family.  This default
-    path moves the byte-column work where the north rule puts it: an
+    Spark's native XPath expressions pay one DOM build per row even
+    with every field pulled through a single ``concat`` — ~22 s per
+    100k-row scan, 10x the rest of the parse family.  This path moves
+    the byte-column work where the north rule puts it: an
     Arrow-batched pandas UDF running expat (``xml.etree`` C parser)
     per row, ~5-10x faster, with the well-formed gate still computed
     Catalyst-side (``rlike``) so NULL semantics are bit-identical to
-    the twin.
+    the XPath formulation (kept in the tests as a reference).
 
-    Output contract (matches the XPath twin, tested for equality):
+    Output contract (matches the XPath reference, tested for equality):
     root attributes as ``a_<name>`` (XPath string semantics — "" when
     the attribute is absent on a well-formed row, NULL on malformed
     rows), first direct child's text concat as ``e_<name>`` (NULL
     when absent/empty), child-element count as ``n_children``.  Rows
     that pass the shape gate but fail the real parser degrade to
     empty fields instead of throwing (the one deliberate divergence —
-    the JVM twin would kill the job; at 10^12 rows graceful per-row
+    JVM XPath would kill the job; at 10^12 rows graceful per-row
     degradation is the only acceptable behavior).
     """
     import pandas as pd
@@ -1640,65 +1640,6 @@ def xmlkv_parse(
         *[F.col(f"_x.{f}").alias(f) for f in fields],
         F.col("_x.n_children").alias("n_children"),
     )
-
-
-def xmlkv_parse_xpath(
-    df: DataFrame,
-    xml_col: str = "xml",
-    root: str = "event",
-    attrs: tuple[str, ...] = ("id", "type"),
-    elements: tuple[str, ...] = ("host",),
-) -> DataFrame:
-    """XML event parse via Spark's native XPath expressions — the
-    pure-Catalyst twin of :func:`xmlkv_parse`, kept for environments
-    where Python workers are unavailable and as the cross-check in
-    tests (the two must agree row-for-row).
-
-    XPath on malformed XML THROWS in the JVM, so every extraction is
-    gated behind a cheap shape regex (CASE short-circuits per row —
-    verified, the malformed path never reaches the XPath engine).
-    Pure codegen, zero exchanges — but one DOM build per row is the
-    JVM floor, ~10x slower than the Arrow kernel.
-    """
-    x = F.col(xml_col)
-    ok = x.rlike(rf"^<{root}( |>).*</{root}>$") | x.rlike(
-        rf"^<{root}( [^>]*)?/>$"
-    )
-    # every xpath_* call re-parses the document (a DOM build per call
-    # per row — the 100k-row scan spent 22 s on 4 parses/row); one
-    # XPath 1.0 concat() pulls all string fields in a single parse,
-    # and only count() needs a second.
-    # count(...) rides in the same concat (XPath 1.0 auto-stringifies
-    # number arguments), so the whole parse is ONE DOM build per row.
-    paths = [f"/{root}/@{a}" for a in attrs] + [
-        f"/{root}/{e}" for e in elements
-    ] + [f"count(/{root}/*)"]
-    sep = "\x01"
-    concat_expr = "concat(" + f", '{sep}', ".join(paths) + ")"
-    parts = F.split(
-        F.when(ok, F.xpath_string(x, F.lit(concat_expr))).otherwise(
-            F.lit("")
-        ),
-        sep,
-        -1,
-    )
-    cols = []
-    for i, a in enumerate(attrs):
-        cols.append(
-            F.when(ok, F.try_element_at(parts, F.lit(i + 1))).alias(
-                f"a_{a}"
-            )
-        )
-    for j, e in enumerate(elements):
-        v = F.try_element_at(parts, F.lit(len(attrs) + j + 1))
-        cols.append(F.when(ok & (v != ""), v).alias(f"e_{e}"))
-    n_children = F.when(
-        ok,
-        F.try_element_at(parts, F.lit(len(attrs) + len(elements) + 1))
-        .cast("double")
-        .cast("long"),
-    ).alias("n_children")
-    return df.select("*", ok.alias("well_formed"), *cols, n_children)
 
 
 def docker_json_parse(df: DataFrame, line_col: str = "line") -> DataFrame:

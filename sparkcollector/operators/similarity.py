@@ -315,24 +315,13 @@ def knn_join_exact(
     ``round``, and the top-k (sim desc, id asc — same deterministic
     tie-break) selected in-kernel, so no pair table ever
     materializes and the rank shuffle disappears.  ~40x on the
-    2000-vector corpus; identical output to the Catalyst twin
-    (:func:`knn_join_exact_catalyst`, kept for Python-worker-free
-    environments and as the cross-check in tests).
+    2000-vector corpus; identical output to the Catalyst
+    formulation (per-pair HOF cosine + rank window) that the tests
+    keep as a reference.  An empty right side gives an empty result.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-
-    rpdf = right.select(
-        F.col(right_id).alias("_rid"), F.col(vec_col).alias("_rvec")
-    ).toPandas()
-    rids = rpdf["_rid"].to_numpy()
-    rmat = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in rpdf["_rvec"]]
-    )
-    rnorm = np.linalg.norm(rmat, axis=1)
-    bc = left.sparkSession.sparkContext.broadcast((rids, rmat, rnorm))
-    kk = int(k)
 
     schema = T.StructType(
         [
@@ -342,6 +331,20 @@ def knn_join_exact(
             T.StructField("rn", T.IntegerType()),
         ]
     )
+    rpdf = right.select(
+        F.col(right_id).alias("_rid"), F.col(vec_col).alias("_rvec")
+    ).toPandas()
+    if rpdf.empty:
+        return left.sparkSession.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+        )
+    rids = rpdf["_rid"].to_numpy()
+    rmat = np.stack(
+        [np.asarray(v, dtype=np.float64) for v in rpdf["_rvec"]]
+    )
+    rnorm = np.linalg.norm(rmat, axis=1)
+    bc = left.sparkSession.sparkContext.broadcast((rids, rmat, rnorm))
+    kk = int(k)
 
     def run(batches):
         rids_, rmat_, rnorm_ = bc.value
@@ -388,42 +391,6 @@ def knn_join_exact(
         F.col(left_id).alias("_lid"), F.col(vec_col).alias("_lvec")
     )
     return src.mapInPandas(run, schema=schema)
-
-
-def knn_join_exact_catalyst(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-) -> DataFrame:
-    """Pure-Catalyst twin of :func:`knn_join_exact` (per-pair HOF
-    cosine + rank window).  Same output; ~40x slower on the JVM HOF
-    path — kept for environments without Python workers and as the
-    equality cross-check in tests."""
-    from pyspark.sql.window import Window
-
-    r = F.broadcast(
-        right.select(
-            F.col(right_id).alias("_rid"), F.col(vec_col).alias("_rvec")
-        )
-    )
-    joined = left.select(F.col(left_id).alias("_lid"), F.col(vec_col).alias("_lvec")).crossJoin(r)
-    scored = joined.withColumn(
-        "sim", F.round(cosine_sim(F.col("_lvec"), F.col("_rvec")), 4)
-    )
-    w = Window.partitionBy("_lid").orderBy(F.col("sim").desc(), F.col("_rid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("_lid").alias(left_id),
-            F.col("_rid").alias("neighbor_id"),
-            "sim",
-            "rn",
-        )
-    )
 
 
 def knn_join_bucketed(

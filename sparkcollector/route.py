@@ -8,7 +8,8 @@ conditions at cmd/otelcol/config/collector/full_config_linux.yaml:
 493-498 use the same predicate language).
 
 Spark-first design: evaluate all predicates ONCE into a single ``sink``
-tag column (a chained ``when``), then write.  Two write strategies:
+tag column (a chained ``when``), then write.  ``job.run_pipeline`` has
+two write strategies:
 
 * ``partitioned`` (default, the 100 TB path): a single
   ``write.partitionBy("sink")`` pass — one job, one scan, no recompute,
@@ -126,41 +127,6 @@ SINK_PROJECTIONS = {
     "events": (project_events, SINK_EVENTS_SCHEMA),
     "traces": (project_traces, SINK_TRACES_SCHEMA),
 }
-
-
-def write_sinks(
-    routed: DataFrame,
-    out_dir: str,
-    strategy: str = "fanout",
-    fmt: str = "parquet",
-) -> dict[str, str]:
-    """Materialize per-sink tables; returns sink → path.
-
-    ``fanout``: cache once, N projected writes (distinct schemas —
-    matches FIXTURES.md §5 exactly).  ``partitioned``: single-pass
-    ``partitionBy("sink")`` of the routed superset schema; cheapest at
-    scale when a unified schema is acceptable.
-    """
-    paths: dict[str, str] = {}
-    if strategy == "partitioned":
-        path = f"{out_dir}/routed"
-        routed.write.mode("overwrite").partitionBy("sink").format(fmt).save(path)
-        for s in SINK_PROJECTIONS:
-            paths[s] = f"{path}/sink={s}"
-        return paths
-
-    routed.persist()
-    try:
-        routed.count()  # materialize once
-        for s, (proj, _) in SINK_PROJECTIONS.items():
-            path = f"{out_dir}/sink_{s}"
-            proj(routed.filter(F.col("sink") == s)).write.mode(
-                "overwrite"
-            ).format(fmt).save(path)
-            paths[s] = path
-    finally:
-        routed.unpersist()
-    return paths
 
 
 @dataclass(frozen=True)

@@ -2,7 +2,8 @@
 
 North-rule requirements made explicit here:
 
-* **stable turn ordering** — ``repartition(conv_id)`` +
+* **stable turn ordering** — ``job.build_pipeline`` does
+  ``repartition(conv_id)`` +
   ``sortWithinPartitions(conv_id, turn_idx)`` before sink writes, so
   the per-turn text sequence is deterministic across runs and across
   parallelism levels (local[8] vs local[32]); ordering comes from the
@@ -19,30 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def repartition_sorted(
-    df: DataFrame,
-    key: str = "conv_id",
-    order: str = "turn_idx",
-    num_partitions: int | None = None,
-    sort_prefix: tuple[str, ...] = (),
-) -> DataFrame:
-    """Deterministic layout: hash-partition by key, sort within.
-
-    ``sort_prefix`` prepends columns to the within-partition sort —
-    used to lead with the sink partition column before a
-    ``partitionBy`` write, so the file writer (which requires
-    partition-column ordering and would otherwise inject its own
-    UNSTABLE sort) sees the required prefix and preserves the
-    (key, order) sequence inside every written file.
-    """
-    rep = (
-        df.repartition(num_partitions, F.col(key))
-        if num_partitions
-        else df.repartition(F.col(key))
-    )
-    return rep.sortWithinPartitions(*sort_prefix, key, order)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -2755,7 +2756,9 @@ def test_count_diagnostics_poisson_vs_zero_inflated(spark):
     ok = [("p", float(c)) for c in [2, 3, 2, 4, 3, 2, 3, 4, 2, 3]]
     zi = [("z", 0.0)] * 8 + [("z", 10.0), ("z", 12.0)]
     df = spark.createDataFrame(ok + zi, "g string, c double")
-    got = {r["g"]: r for r in count_distribution_diagnostics(df, "g", "c").collect()}
+    totals = df.groupBy("g").agg(F.count(F.lit(1)).alias("n_cells"))
+    got = {r["g"]: r for r in count_distribution_diagnostics(
+        df.filter("c > 0"), "g", "c", totals).collect()}
     assert got["p"]["dispersion_ratio"] < 1.0
     assert got["p"]["nb_size_r"] is None  # not overdispersed
     assert got["z"]["dispersion_ratio"] > 5.0
@@ -4361,7 +4364,8 @@ def test_croston_tracks_size_and_interval(spark):
     rows = [("s", t, 6.0 if t % 3 == 0 else 0.0)
             for t in range(1, 31)]
     df = spark.createDataFrame(rows, "g string, o long, d double")
-    r = croston_intermittent(df, ["g"], "o", "d", alpha=0.2).collect()[0]
+    per = df.groupBy("g").agg(F.count(F.lit(1)).alias("n_periods"))
+    r = croston_intermittent(df, ["g"], "o", "d", per, alpha=0.2).collect()[0]
     assert r["n_periods"] == 30 and r["demand_periods"] == 10
     assert abs(r["z_hat"] - 6.0) < 1e-9
     assert 2.5 < r["p_hat"] <= 3.0
@@ -4371,7 +4375,8 @@ def test_croston_tracks_size_and_interval(spark):
     z = spark.createDataFrame(
         [("z", t, 0.0) for t in range(1, 11)], "g string, o long, d double"
     )
-    rz = croston_intermittent(z, ["g"], "o", "d").collect()[0]
+    per_z = z.groupBy("g").agg(F.count(F.lit(1)).alias("n_periods"))
+    rz = croston_intermittent(z, ["g"], "o", "d", per_z).collect()[0]
     assert rz["demand_periods"] == 0 and rz["croston_rate"] is None
 
 
@@ -4944,7 +4949,8 @@ def test_zip_mom_recovers_planted_mixture(spark):
         else:
             rows.append((pois[i % 10],))
     df = spark.createDataFrame(rows, "k int")
-    r = zip_mom_fit(df, "k").collect()[0]
+    totals = df.agg(F.count(F.lit(1)).alias("n_cells"))
+    r = zip_mom_fit(df.filter("k > 0"), "k", totals).collect()[0]
     # the deterministic replicate list is UNDER-dispersed relative to
     # a true Poisson(4), which biases MoM pi downward — direction and
     # rough magnitude still recover the planted inflation
@@ -6243,6 +6249,123 @@ def test_impossible_travel_simultaneous_logins_flagged(spark):
     assert out["u2"]["speed_kmh"] is None or out["u2"]["elapsed_s"] == 1.0
 
 
+def _count_distribution_diagnostics_dense(
+    unit_counts: DataFrame,
+    group_col: str,
+    count_col: str,
+) -> DataFrame:
+    """Dense-grid reference for ``count_distribution_diagnostics``:
+    power sums over EVERY unit cell, zero cells included."""
+    c = F.col(count_col).cast("double")
+    agg = unit_counts.groupBy(group_col).agg(
+        F.count(F.lit(1)).cast("double").alias("_n"),
+        F.sum(c).alias("_s"),
+        F.sum(c * c).alias("_q"),
+        F.sum((c == 0).cast("int")).cast("double").alias("_z"),
+    )
+    n, s, q = F.col("_n"), F.col("_s"), F.col("_q")
+    m = s / n
+    v = (q - s * s / n) / (n - 1)
+    return agg.select(
+        group_col,
+        n.cast("long").alias("n_units"),
+        F.round(m, 6).alias("mean"),
+        F.round(v, 6).alias("var"),
+        F.round(v / m, 6).alias("dispersion_ratio"),
+        F.round(F.when(v > m, m * m / (v - m)), 6).alias("nb_size_r"),
+        F.round(F.col("_z") / n, 6).alias("zero_frac"),
+        F.round(F.exp(-m), 6).alias("poisson_zero_frac"),
+    )
+
+
+def _croston_intermittent_dense(
+    df: DataFrame,
+    group_cols: list[str],
+    order_col: str,
+    demand_col: str,
+    alpha: float = 0.1,
+) -> DataFrame:
+    """Dense reference for ``croston_intermittent``: the textbook fold
+    over every period of the zero-filled series, updating only where
+    ``d > 0``."""
+    base = df.select(
+        *group_cols,
+        F.col(order_col).cast("long").alias("_o"),
+        F.col(demand_col).cast("double").alias("_d"),
+    )
+    ser = base.groupBy(*group_cols).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("_o", "_d"))),
+            lambda e: e["_d"],
+        ).alias("_ds"),
+    )
+    a_ = alpha
+    fold = (
+        "aggregate(_ds,"
+        " named_struct('z', cast(0.0 as double), 'p',"
+        " cast(0.0 as double), 'q', cast(1.0 as double),"
+        " 'init', false, 'nd', cast(0 as bigint)),"
+        " (acc, d) -> case"
+        " when d > 0 and not acc.init then named_struct("
+        " 'z', d, 'p', acc.q, 'q', cast(1.0 as double),"
+        " 'init', true, 'nd', acc.nd + 1)"
+        " when d > 0 then named_struct("
+        f" 'z', acc.z + {a_} * (d - acc.z),"
+        f" 'p', acc.p + {a_} * (acc.q - acc.p),"
+        " 'q', cast(1.0 as double), 'init', true, 'nd', acc.nd + 1)"
+        " else named_struct('z', acc.z, 'p', acc.p,"
+        " 'q', acc.q + 1.0, 'init', acc.init, 'nd', acc.nd) end)"
+    )
+    folded = ser.withColumn("_st", F.expr(fold))
+    st = F.col("_st")
+    rate = st.getField("z") / st.getField("p")
+    return folded.select(
+        *group_cols,
+        F.size("_ds").cast("bigint").alias("n_periods"),
+        st.getField("nd").alias("demand_periods"),
+        F.when(st.getField("init"), F.round(st.getField("z"), 6))
+        .alias("z_hat"),
+        F.when(st.getField("init"), F.round(st.getField("p"), 6))
+        .alias("p_hat"),
+        F.when(st.getField("init"), F.round(rate, 6))
+        .alias("croston_rate"),
+        F.when(st.getField("init"), F.round((1 - a_ / 2) * rate, 6))
+        .alias("sba_rate"),
+    )
+
+
+def _zip_mom_fit_dense(
+    df: DataFrame,
+    count_col: str,
+) -> DataFrame:
+    """Dense-grid reference for ``zip_mom_fit``: moments averaged
+    over every unit cell, zero cells included."""
+    a = df.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.avg(F.col(count_col).cast("double")).alias("m"),
+        F.avg(
+            F.col(count_col).cast("double")
+            * F.col(count_col).cast("double")
+        ).alias("m2"),
+        F.avg(
+            (F.col(count_col) == 0).cast("double")
+        ).alias("p0_obs"),
+    )
+    var = F.col("m2") - F.col("m") * F.col("m")
+    lam = (var + F.col("m") * F.col("m") - F.col("m")) / F.col("m")
+    pi = 1 - F.col("m") / lam
+    p0_model = pi + (1 - pi) * F.exp(-lam)
+    return a.select(
+        F.col("n").cast("bigint").alias("n_obs"),
+        F.round("m", 6).alias("mean"),
+        F.round(var, 6).alias("var"),
+        F.round(lam, 6).alias("lambda_fit"),
+        F.round(pi, 6).alias("pi_zero_inflation"),
+        F.round("p0_obs", 6).alias("zero_share_observed"),
+        F.round(p0_model, 6).alias("zero_share_model"),
+    )
+
+
 def test_sparse_twins_match_dense_grids(spark):
     """The round-5 grid-free rewrites must reproduce the dense-grid
     operators EXACTLY (same float ops, zero cells folded to
@@ -6254,11 +6377,8 @@ def test_sparse_twins_match_dense_grids(spark):
     from pyspark.sql.window import Window
     from sparkcollector.operators.analytics import (
         count_distribution_diagnostics,
-        count_distribution_diagnostics_sparse,
         croston_intermittent,
-        croston_intermittent_sparse,
         zip_mom_fit,
-        zip_mom_fit_sparse,
     )
 
     rng = random.Random(7)
@@ -6284,7 +6404,7 @@ def test_sparse_twins_match_dense_grids(spark):
     )
     dense = {
         r["g"]: r for r in
-        count_distribution_diagnostics(grid, "g", "c").collect()
+        _count_distribution_diagnostics_dense(grid, "g", "c").collect()
     }
     totals = spark.createDataFrame(
         [(g, len([u for u in units
@@ -6294,18 +6414,18 @@ def test_sparse_twins_match_dense_grids(spark):
     )
     sparse = {
         r["g"]: r for r in
-        count_distribution_diagnostics_sparse(nz, "g", "c", totals).collect()
+        count_distribution_diagnostics(nz, "g", "c", totals).collect()
     }
     assert set(dense) == set(sparse)
     for g in dense:
         assert dense[g].asDict() == sparse[g].asDict(), g
 
     # zip_mom_fit: global moments over the same grid
-    d = zip_mom_fit(grid.select("c"), "c").collect()[0].asDict()
+    d = _zip_mom_fit_dense(grid.select("c"), "c").collect()[0].asDict()
     tot1 = spark.createDataFrame(
         [(len(units) * len(buckets),)], "n_cells long"
     )
-    s = zip_mom_fit_sparse(nz.select("c"), "c", tot1).collect()[0].asDict()
+    s = zip_mom_fit(nz.select("c"), "c", tot1).collect()[0].asDict()
     assert d == s
 
     # croston: dense fold over the zero-filled series vs sparse fold
@@ -6319,7 +6439,8 @@ def test_sparse_twins_match_dense_grids(spark):
     series = spark.createDataFrame(dem_rows, "g string, o long, d double")
     dense_c = {
         r["g"]: r.asDict() for r in
-        croston_intermittent(series, ["g"], "o", "d", alpha=0.1).collect()
+        _croston_intermittent_dense(
+            series, ["g"], "o", "d", alpha=0.1).collect()
     }
     demands = series.filter(F.col("d") > 0).select(
         "g", F.col("o").alias("rn"), "d"
@@ -6328,8 +6449,27 @@ def test_sparse_twins_match_dense_grids(spark):
         [("a", len(periods)), ("b", len(periods))], "g string, n_periods long"
     )
     sparse_c = {
-        r["g"]: r.asDict() for r in croston_intermittent_sparse(
+        r["g"]: r.asDict() for r in croston_intermittent(
             demands, ["g"], "rn", "d", per, alpha=0.1
         ).collect()
     }
     assert dense_c == sparse_c
+
+
+def test_croston_zero_demand_row_matches_dense(spark):
+    """A zero-demand row handed to the grid-free fold is a zero
+    period, not a demand point: the result equals the dense fold."""
+    from sparkcollector.operators.analytics import croston_intermittent
+
+    demand = {1: 4.0, 3: 0.0, 4: 6.0, 6: 2.0}  # period 3 demands nothing
+    ddl = "g string, o long, d double"
+    pts = spark.createDataFrame([("a", o, d) for o, d in demand.items()], ddl)
+    series = spark.createDataFrame(
+        [("a", t, demand.get(t, 0.0)) for t in range(1, 9)], ddl
+    )
+    per = spark.createDataFrame([("a", 8)], "g string, n_periods long")
+    got = croston_intermittent(pts, ["g"], "o", "d", per, alpha=0.2)
+    exp = _croston_intermittent_dense(series, ["g"], "o", "d", alpha=0.2)
+    row = got.collect()[0].asDict()
+    assert row == exp.collect()[0].asDict()
+    assert row["demand_periods"] == 3

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkcollector.config import compile_pipeline, dry_run
@@ -73,8 +74,15 @@ def test_transform_statements(spark, turns_df):
 def test_dry_run_prints_effective_config():
     cfg = json.loads(dry_run())
     p = cfg["pipeline"]
-    assert p["parse"]["engine"] == "pandas"
+    assert p["parse"]["engine"] == "builtin"
     assert p["route"]["rules"][0]["sink"] == "traces"
+
+
+def test_parse_engine_pandas_is_rejected(turns_df):
+    """The parse engines are builtin | off; the old pandas value fails."""
+    run = compile_pipeline({"pipeline": {"parse": {"engine": "pandas"}}})
+    with pytest.raises(ValueError, match="unknown parse engine"):
+        run(turns_df)
 
 
 # --- config-source resolution (env/file interpolation + overrides) ---
@@ -208,7 +216,7 @@ def test_multimodal_feature_extraction(spark):
 def test_multimodal_resize_and_frames(spark):
     from sparkcollector.operators.multimodal import (
         decode_image,
-        frame_sample_stub,
+        frame_sample,
         resize_images,
         synth_media,
     )
@@ -229,7 +237,7 @@ def test_multimodal_resize_and_frames(spark):
     for r in by_kind["audio"] + by_kind["video"]:
         assert r["mime"] != "image/x-portable-pixmap"
 
-    frames = frame_sample_stub(media, every_ms=5000).collect()
+    frames = frame_sample(media, every_ms=5000).collect()
     vids = {r["media_id"] for r in media.filter("kind='video'").collect()}
     assert {r["media_id"] for r in frames} <= vids
     assert len(frames) > 0 and all(r["frame_ms"] % 5000 == 0 for r in frames)

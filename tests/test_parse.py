@@ -1,4 +1,5 @@
-"""Parse stage: pandas-UDF path vs builtin Catalyst path parity, plus
+"""Parse stage: the product's Catalyst ``regexp_extract`` parse against
+a pandas-UDF reference (Python ``re``, a second regex engine), plus
 stanza-parser semantics (non-matching rows preserved, severity mapping).
 Reference behavior: stanza regex_parser/severity operators in
 cmd/otelcol/config/collector/splunk_logs_config_linux.yaml:185-220."""
@@ -9,26 +10,64 @@ import re
 
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from sparkcollector.parse import (
     CALL_RE,
+    LOG_TS_RE,
     SEVERITY_MAP,
     SEVERITY_RE,
     SPAN_RE,
     parse_turns,
-    parse_turns_builtin,
 )
+from sparkcollector.schema import PARSED_STRUCT
 
-PARSED_COLS = [
-    "severity",
-    "tool_name",
-    "tool_status",
-    "dur_ms",
-    "span_id",
-    "parent_span_id",
-    "span_op",
-    "log_ts",
-]
+PARSED_COLS = PARSED_STRUCT.fieldNames()
+
+
+@pandas_udf(PARSED_STRUCT)
+def _parse_udf(text: pd.Series) -> pd.DataFrame:
+    """All extractions in one Arrow batch pass.
+
+    ``re.ASCII``: Python's ``\\w``/``\\d`` are Unicode-aware by default,
+    Java's (:func:`parse_turns`) and RE2's (the DuckDB oracle) are
+    ASCII-only; without the flag ``CALL café(...)`` or ``dur=٣٤ms``
+    would parse here and nowhere else.
+    """
+    sev_re = re.compile(SEVERITY_RE, re.ASCII)
+    call_re = re.compile(CALL_RE, re.ASCII)
+    span_re = re.compile(SPAN_RE, re.ASCII)
+    lts_re = re.compile(LOG_TS_RE, re.ASCII)
+
+    sev_raw = text.str.extract(sev_re, expand=False)
+    severity = sev_raw.map(SEVERITY_MAP, na_action="ignore")
+
+    call = text.str.extract(call_re)
+    span = text.str.extract(span_re)
+    lts = text.str.extract(lts_re, expand=False)
+
+    dur = pd.to_numeric(call[3], errors="coerce").astype("Int64")
+    parent = span[1].where(span[1] != "-")
+    log_ts = pd.to_datetime(lts, format="%d/%b/%Y:%H:%M:%S", errors="coerce")
+
+    return pd.DataFrame(
+        {
+            "severity": severity,
+            "tool_name": call[0],
+            "tool_status": call[2],
+            "dur_ms": dur,
+            "span_id": span[0],
+            "parent_span_id": parent,
+            "span_op": span[2],
+            "log_ts": log_ts,
+        }
+    )
+
+
+def _reference_parse(df, text_col: str = "text"):
+    """Reference parse: one pandas-UDF pass adding all parsed columns."""
+    parsed = df.withColumn("_p", _parse_udf(F.col(text_col)))
+    return parsed.select("*", "_p.*").drop("_p")
 
 
 def _norm(df):
@@ -37,9 +76,15 @@ def _norm(df):
 
 
 def test_pandas_and_builtin_paths_agree(turns_df):
-    a = _norm(parse_turns(turns_df))
-    b = _norm(parse_turns_builtin(turns_df))
+    a = _norm(_reference_parse(turns_df))
+    b = _norm(parse_turns(turns_df))
     assert a == b
+
+
+def test_parsed_columns_match_declared_schema(turns_df):
+    out = parse_turns(turns_df)
+    got = [(f.name, f.dataType) for f in out.schema.fields[-len(PARSED_COLS):]]
+    assert got == [(f.name, f.dataType) for f in PARSED_STRUCT.fields]
 
 
 def test_no_rows_dropped(turns_df):
@@ -81,8 +126,8 @@ def test_severity_custom_mapping(spark):
 
 def test_non_ascii_text_parses_and_routes_like_builtin(spark):
     """Python's Unicode ``\\w``/``\\d`` must not widen the patterns: on
-    non-ASCII text the pandas path extracts, and routes, exactly what
-    the Java-regex path (and the RE2 oracle) does."""
+    non-ASCII text the pandas reference extracts, and routes, exactly
+    what the Java-regex product parse (and the RE2 oracle) does."""
     from sparkcollector.route import route
 
     df = spark.createDataFrame(
@@ -97,7 +142,7 @@ def test_non_ascii_text_parses_and_routes_like_builtin(spark):
         return sorted(out.collect())
 
     got = routed(parse_turns)
-    assert got == routed(parse_turns_builtin)
+    assert got == routed(_reference_parse)
     assert got[0].tool_name is None and got[0].sink == "events"
     assert got[1].tool_name is None and got[1].dur_ms is None
     assert got[1].sink == "events"

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkcollector.operators.promparse import (
@@ -1279,14 +1280,67 @@ def test_elb_log_parse_ipv6_client(spark):
     assert r["elb_status"] == 200
 
 
-def test_xmlkv_vectorized_matches_xpath_twin(spark):
-    """The Arrow-kernel default and the Catalyst XPath twin must agree
-    row-for-row (same gate, same XPath string semantics)."""
-    from pyspark.sql import functions as F
-    from sparkcollector.operators.promparse import (
-        xmlkv_parse,
-        xmlkv_parse_xpath,
+def _xmlkv_parse_xpath(
+    df: DataFrame,
+    xml_col: str = "xml",
+    root: str = "event",
+    attrs: tuple[str, ...] = ("id", "type"),
+    elements: tuple[str, ...] = ("host",),
+) -> DataFrame:
+    """Reference for ``xmlkv_parse``: the same parse via Spark's native
+    XPath expressions (the two must agree row-for-row).
+
+    XPath on malformed XML THROWS in the JVM, so every extraction is
+    gated behind a cheap shape regex (CASE short-circuits per row —
+    verified, the malformed path never reaches the XPath engine).
+    Pure codegen, zero exchanges — but one DOM build per row is the
+    JVM floor, ~10x slower than the Arrow kernel.
+    """
+    x = F.col(xml_col)
+    ok = x.rlike(rf"^<{root}( |>).*</{root}>$") | x.rlike(
+        rf"^<{root}( [^>]*)?/>$"
     )
+    # every xpath_* call re-parses the document (a DOM build per call
+    # per row — the 100k-row scan spent 22 s on 4 parses/row); one
+    # XPath 1.0 concat() pulls all string fields in a single parse,
+    # and only count() needs a second.
+    # count(...) rides in the same concat (XPath 1.0 auto-stringifies
+    # number arguments), so the whole parse is ONE DOM build per row.
+    paths = [f"/{root}/@{a}" for a in attrs] + [
+        f"/{root}/{e}" for e in elements
+    ] + [f"count(/{root}/*)"]
+    sep = "\x01"
+    concat_expr = "concat(" + f", '{sep}', ".join(paths) + ")"
+    parts = F.split(
+        F.when(ok, F.xpath_string(x, F.lit(concat_expr))).otherwise(
+            F.lit("")
+        ),
+        sep,
+        -1,
+    )
+    cols = []
+    for i, a in enumerate(attrs):
+        cols.append(
+            F.when(ok, F.try_element_at(parts, F.lit(i + 1))).alias(
+                f"a_{a}"
+            )
+        )
+    for j, e in enumerate(elements):
+        v = F.try_element_at(parts, F.lit(len(attrs) + j + 1))
+        cols.append(F.when(ok & (v != ""), v).alias(f"e_{e}"))
+    n_children = F.when(
+        ok,
+        F.try_element_at(parts, F.lit(len(attrs) + len(elements) + 1))
+        .cast("double")
+        .cast("long"),
+    ).alias("n_children")
+    return df.select("*", ok.alias("well_formed"), *cols, n_children)
+
+
+def test_xmlkv_vectorized_matches_xpath_twin(spark):
+    """The Arrow kernel and the Catalyst XPath reference must agree
+    row-for-row (same gate, same XPath string semantics)."""
+    from sparkcollector.operators.promparse import xmlkv_parse
 
     eid = F.col("id")
     full = F.concat(
@@ -1305,7 +1359,7 @@ def test_xmlkv_vectorized_matches_xpath_twin(spark):
     )
     df = spark.range(500).select(eid.alias("id"), xml.alias("xml"))
     a = xmlkv_parse(df, "xml", "event", ("id", "type"), ("host",))
-    b = xmlkv_parse_xpath(df, "xml", "event", ("id", "type"), ("host",))
+    b = _xmlkv_parse_xpath(df, "xml", "event", ("id", "type"), ("host",))
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb

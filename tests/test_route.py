@@ -6,12 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkcollector.parse import parse_turns
-from sparkcollector.route import (
-    DEFAULT_RULES,
-    RoutingRule,
-    route,
-    write_sinks,
-)
+from sparkcollector.route import RoutingRule, route
 
 
 def _mk(spark, text):
@@ -53,19 +48,6 @@ def test_every_row_routed_exactly_once(turns_df):
     assert routed.count() == turns_df.count()
     sinks = {r["sink"] for r in routed.select("sink").distinct().collect()}
     assert sinks <= {"metrics", "events", "traces"}
-
-
-def test_write_sinks_fanout_vs_partitioned_equal_counts(spark, turns_df, tmp_path):
-    from sparkcollector.enrich import enrich_turns
-
-    routed = route(enrich_turns(parse_turns(turns_df)))
-    p1 = write_sinks(routed, str(tmp_path / "fan"), strategy="fanout")
-    p2 = write_sinks(routed, str(tmp_path / "part"), strategy="partitioned")
-    for s in p1:
-        n_fan = spark.read.parquet(p1[s]).count()
-        n_part = spark.read.parquet(p2[s]).count()
-        assert n_fan == n_part, s
-    assert sum(spark.read.parquet(p1[s]).count() for s in p1) == turns_df.count()
 
 
 class TestMetadataExporterSelection:

@@ -5,9 +5,13 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from sparkcollector.operators.similarity import (
+    cosine_sim,
     cosine_topk,
     knn_join_exact,
     lsh_bucket_topk,
@@ -396,16 +400,43 @@ def test_mmr_rerank_lam1_reduces_to_topk(spark):
     assert out == [1, 2, 3, 4]  # pure relevance order
 
 
-def test_knn_join_numpy_matches_catalyst_twin(spark):
-    """The round-5 BLAS kernel and the Catalyst HOF twin must produce
-    identical (id, neighbor, 4dp sim, rank) rows."""
-    import numpy as np
-
-    from sparkcollector.operators.similarity import (
-        knn_join_exact,
-        knn_join_exact_catalyst,
+def _knn_join_exact_catalyst(
+    left: DataFrame,
+    right: DataFrame,
+    k: int = 5,
+    vec_col: str = "embedding",
+    left_id: str = "vec_id",
+    right_id: str = "vec_id",
+) -> DataFrame:
+    """Reference for ``knn_join_exact``: per-pair HOF cosine + rank
+    window, all in Catalyst (~40x slower, same output)."""
+    r = F.broadcast(
+        right.select(
+            F.col(right_id).alias("_rid"), F.col(vec_col).alias("_rvec")
+        )
+    )
+    joined = left.select(
+        F.col(left_id).alias("_lid"), F.col(vec_col).alias("_lvec")
+    ).crossJoin(r)
+    scored = joined.withColumn(
+        "sim", F.round(cosine_sim(F.col("_lvec"), F.col("_rvec")), 4)
+    )
+    w = Window.partitionBy("_lid").orderBy(F.col("sim").desc(), F.col("_rid"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(
+            F.col("_lid").alias(left_id),
+            F.col("_rid").alias("neighbor_id"),
+            "sim",
+            "rn",
+        )
     )
 
+
+def test_knn_join_numpy_matches_catalyst_twin(spark):
+    """The round-5 BLAS kernel and the Catalyst HOF reference must
+    produce identical (id, neighbor, 4dp sim, rank) rows."""
     rng = np.random.default_rng(23)
     rows = [
         (int(i), [float(x) for x in rng.standard_normal(16)])
@@ -414,5 +445,20 @@ def test_knn_join_numpy_matches_catalyst_twin(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     left = df.filter("vec_id < 25")
     a = sorted(map(tuple, knn_join_exact(left, df, k=4).collect()))
-    b = sorted(map(tuple, knn_join_exact_catalyst(left, df, k=4).collect()))
+    b = sorted(map(tuple, _knn_join_exact_catalyst(left, df, k=4).collect()))
     assert a == b
+
+
+def test_knn_join_empty_right_side_matches_catalyst(spark):
+    """No right rows: no neighbours, with the declared column types
+    (the kernel used to fail stacking an empty right matrix)."""
+    rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0])]
+    left = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    right = left.filter("vec_id < 0")
+    a = knn_join_exact(left, right, k=3)
+    b = _knn_join_exact_catalyst(left, right, k=3)
+    assert a.collect() == b.collect() == []
+    assert a.dtypes == b.dtypes == [
+        ("vec_id", "bigint"), ("neighbor_id", "bigint"),
+        ("sim", "double"), ("rn", "int"),
+    ]
