@@ -17,11 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from sparkcollector.aggregate import count_connector
-    from sparkcollector.job import build_pipeline
+    from sparkcollector.config import compile_pipeline
     from sparkcollector.queries import transcripts_from_events
 
     turns = transcripts_from_events(spark, "/root/testdata/sf0.001")
-    routed = build_pipeline(turns)
+    routed = compile_pipeline()(turns)
     return count_connector(routed)
 
 

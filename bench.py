@@ -8,8 +8,10 @@ ONE JSON line::
     {"metric": "...", "value": N, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": ...}
 
-Headline #1 is the flagship end-to-end pipeline (parse -> enrich ->
-route -> order -> aggregate, the north rule's job); the rest are
+Headline #1 is the flagship pipeline under the count connector
+(repartition -> parse -> enrich -> route -> aggregate; Catalyst prunes
+the order step and nothing is written, so it is not the whole job —
+perfbench's ``flat_job`` times that); the rest are
 representative operators from the SURVEY.md §2 registry.  Every query
 is materialized through the ``noop`` data source so the full result is
 computed (a bare ``count()`` would let Catalyst prune projected
@@ -100,7 +102,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from sparkcollector.aggregate import count_connector
-    from sparkcollector.job import build_pipeline
+    from sparkcollector.config import compile_pipeline
     from sparkcollector.queries import queries as registry
     from sparkcollector.queries import transcripts_from_events
 
@@ -108,18 +110,22 @@ def main() -> None:
     # codegen and broadcast machinery are hot — we measure
     # steady-state throughput, not container cold start.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    pipeline = compile_pipeline()
     warm = count_connector(
-        build_pipeline(transcripts_from_events(spark, sf_dir).limit(2000))
+        pipeline(transcripts_from_events(spark, sf_dir).limit(2000))
     )
     warm.agg(F.sum("n")).collect()
 
     timings: dict[str, float] = {}
 
-    # -- e2e flagship pipeline: one pass, aggregate re-summed so every
-    #    stage (regexp_extract parse, broadcast enrich, route, repartition+
-    #    sort, windowed grouped counts) actually executes.
+    # -- e2e flagship pipeline under the count connector, aggregate
+    #    re-summed.  Not the whole job: Catalyst prunes the
+    #    sortWithinPartitions under the aggregate and nothing is written,
+    #    so this times scan, repartition(conv_id), parse, enrich, route
+    #    and the grouped counts.  The key keeps its name so earlier
+    #    rounds stay comparable.
     t0 = time.time()
-    agg = count_connector(build_pipeline(transcripts_from_events(spark, sf_dir)))
+    agg = count_connector(pipeline(transcripts_from_events(spark, sf_dir)))
     n_turns = int(agg.agg(F.sum("n").alias("t")).collect()[0]["t"])
     e2e = time.time() - t0
     timings["e2e_pipeline"] = round(e2e, 3)

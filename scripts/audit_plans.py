@@ -73,7 +73,7 @@ def audit(name, df_fn, checks, out, notes="", spark=None):
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from sparkcollector.job import build_pipeline
+    from sparkcollector.config import compile_pipeline
     from sparkcollector.session import get_spark
     from sparkcollector.aggregate import count_connector
     from sparkcollector.queries import queries, transcripts_from_events
@@ -86,9 +86,7 @@ def main() -> None:
     #    enrich joins broadcast; no sort-merge join anywhere.
     all_ok &= audit(
         "pipeline_routed",
-        lambda: build_pipeline(
-            transcripts_from_events(spark, SF_DIR), sort_prefix=("sink",)
-        ),
+        lambda: compile_pipeline()(transcripts_from_events(spark, SF_DIR)),
         [
             ("broadcast enrich (no SortMergeJoin)", lambda p: "SortMergeJoin" not in p),
             (">=2 BroadcastHashJoin", lambda p: p.count("BroadcastHashJoin") >= 2),
@@ -108,9 +106,7 @@ def main() -> None:
     all_ok &= audit(
         "count_connector",
         lambda: count_connector(
-            build_pipeline(
-                transcripts_from_events(spark, SF_DIR), sort_prefix=("sink",)
-            )
+            compile_pipeline()(transcripts_from_events(spark, SF_DIR))
         ),
         [
             ("partial aggregation present", lambda p: "partial_count" in p or "Partial" in p),
@@ -228,10 +224,8 @@ def main() -> None:
     write_bucketed_table(spark, f"{tmpd}/flat.parquet", f"{tmpd}/bucketed", 8)
     all_ok &= audit(
         "bucketed_pipeline_shuffle_free",
-        lambda: build_pipeline(
-            spark.table("transcripts_bucketed"),
-            sort_prefix=("sink",),
-            prepartitioned=True,
+        lambda: compile_pipeline()(
+            spark.table("transcripts_bucketed"), prepartitioned=True
         ),
         [
             ("ZERO shuffle exchanges (pure map job)",

@@ -11,21 +11,25 @@ the reference's ``--dry-run`` converter
 (internal/configconverter/dry_run.go, asserted by
 tests/general/splunk_platform_logs_test.go:56-105).
 
-Config shape (all keys optional; defaults = the north-rule pipeline)::
+Config shape (all keys optional; defaults = the north-rule pipeline,
+which is exactly what ``job.run_pipeline`` runs)::
 
     pipeline:
-      parse: {engine: builtin}                 # builtin (Catalyst) | off
       exclude:                                  # filter processor (§2.4):
         - {column: role, items: ["!tool"]}      #   drop rows matching ANY
-      enrich: {role_attrs: true, tool_attrs: true}
-      route:
-        rules:
-          - {predicate: "span_id IS NOT NULL", sink: traces}
-        default: events
+      parse: {engine: builtin}                 # builtin (Catalyst) | off
+      enrich: true                              # broadcast role/tool dims
       transform:                                # OTTL set-statements:
         - {set: sourcetype, expr: "'XmlWinEventLog'",
            where: "role = 'system'"}            #   conditional column set
-      order: {by: [conv_id, turn_idx]}          # stable-turn ordering
+      route:
+        rules:
+          - {predicate: "span_id IS NOT NULL", sink: traces}
+        default: events                         # sink of unmatched rows
+      order: true                               # sink, conv_id, turn_idx
+
+``enrich`` and ``order`` take true | false (null counts as false);
+anything else raises ``ValueError`` naming the key.
 """
 
 from __future__ import annotations
@@ -41,21 +45,21 @@ from pyspark.sql import functions as F
 from .enrich import enrich_turns
 from .filters import overridable_string_filter
 from .parse import parse_turns
-from .route import DEFAULT_RULES, RoutingRule, route
+from .route import DEFAULT_RULES, DEFAULT_SINK, RoutingRule, route
 
 DEFAULT_CONFIG: dict[str, Any] = {
     "pipeline": {
         "parse": {"engine": "builtin"},
         "exclude": [],
-        "enrich": {"role_attrs": True, "tool_attrs": True},
+        "enrich": True,
         "transform": [],
         "route": {
             "rules": [
                 {"predicate": r.predicate, "sink": r.sink} for r in DEFAULT_RULES
             ],
-            "default": "events",
+            "default": DEFAULT_SINK,
         },
-        "order": {"by": ["conv_id", "turn_idx"]},
+        "order": True,
     }
 }
 
@@ -170,33 +174,57 @@ def _exclude_predicate(specs: list[dict]) -> Column | None:
     return dropped
 
 
+def _switch(cfg: dict, key: str) -> bool:
+    """An on/off stage: true | false, with null counting as false."""
+    v = cfg.get(key)
+    if v is None or isinstance(v, bool):
+        return bool(v)
+    raise ValueError(f"config: {key} must be true or false, got {v!r}")
+
+
 def compile_pipeline(
     config: dict | None = None,
     env: dict[str, str] | None = None,
     properties: dict[str, Any] | None = None,
 ):
-    """Compile a config dict into ``fn(turns: DataFrame) -> DataFrame``.
+    """Compile a config dict into ``fn(turns, prepartitioned=False)``.
 
     ``${env:...}``/``${file:...}`` expressions and dot-path
     ``properties`` overrides resolve first (``resolve_config``), then
-    user config shallow-merges over defaults.  The returned plan:
-    exclude-filter → parse → enrich → route →
-    sortWithinPartitions(order) — each stage present iff configured.
+    user config shallow-merges over defaults.  This is the one place
+    the stages are put together, for the batch job, a config and a
+    streaming input alike.  The returned plan:
+
+    1. exclude filter;
+    2. ``repartition(conv_id)`` of the NARROW input, the plan's one
+       exchange: it spreads a poorly split scan across every core for
+       the parse, shuffles 6 columns instead of the parsed and enriched
+       rows, and places each conversation whole in one task.  Skipped
+       when ``prepartitioned=True`` (a conv_id-bucketed scan already
+       delivers that placement, so the run is a pure map job) and on a
+       streaming input (each micro-batch is ordered at the sink);
+    3. parse; 4. enrich; 5. transform statements;
+    6. route (first matching rule, else ``route.default``);
+    7. ``sortWithinPartitions(sink, conv_id, turn_idx)``: stable turn
+       order, led by ``sink`` so a ``partitionBy("sink")`` write keeps
+       it without a sort of its own.  Skipped on a streaming input,
+       where ``write_stream_sinks`` orders each epoch instead.
     """
     cfg = _merged(resolve_config(config, env=env, properties=properties))
 
-    def run(turns: DataFrame) -> DataFrame:
+    def run(turns: DataFrame, prepartitioned: bool = False) -> DataFrame:
         df = turns
         drop = _exclude_predicate(cfg.get("exclude") or [])
         if drop is not None:
             df = df.filter(~drop)
+        if not (prepartitioned or df.isStreaming):
+            df = df.repartition(F.col("conv_id"))
         engine = (cfg.get("parse") or {}).get("engine", "builtin")
         if engine == "builtin":
             df = parse_turns(df)
         elif engine != "off":
             raise ValueError(f"unknown parse engine {engine!r}")
-        en = cfg.get("enrich") or {}
-        if en.get("role_attrs") or en.get("tool_attrs"):
+        if _switch(cfg, "enrich"):
             df = enrich_turns(df)
         # OTTL transform statements (splunk_logs_config_windows.yaml:
         # 171-241 style): ordered conditional sets; an unconditional
@@ -214,10 +242,9 @@ def compile_pipeline(
             df = df.withColumn(stmt["set"], value)
         rt = cfg.get("route") or {}
         rules = [RoutingRule(r["predicate"], r["sink"]) for r in rt.get("rules", [])]
-        df = route(df, rules or None)
-        order = (cfg.get("order") or {}).get("by")
-        if order:
-            df = df.repartition(F.col(order[0])).sortWithinPartitions(*order)
+        df = route(df, rules or None, rt.get("default", DEFAULT_SINK))
+        if _switch(cfg, "order") and not df.isStreaming:
+            df = df.sortWithinPartitions("sink", "conv_id", "turn_idx")
         return df
 
     run.effective_config = {"pipeline": cfg}  # type: ignore[attr-defined]

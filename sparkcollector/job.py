@@ -9,15 +9,17 @@ entrypoint:
     spark-submit --master <cluster> --py-files sparkcollector.zip \
         -m sparkcollector.job --input <transcripts> --out <dir>
 
-Phases (one plan; Catalyst pipelines them, so they are not timed
-one by one):
+Phases (one plan, the default config of ``config.compile_pipeline``;
+Catalyst pipelines them, so they are not timed one by one):
   1. scan       parquet/snapshot-catalog read of transcripts
-  2. parse      regexp_extract field extraction in Catalyst (parse.py)
-  3. enrich     broadcast role/tool lookups (enrich.py)
-  4. route      first-match-wins sink tagging (route.py)
-  5. order      repartition(conv_id) + sortWithinPartitions(conv_id,
-                turn_idx) — stable turn ordering before writes
-  6. write      fan-out sink writes + agg_counts table
+  2. spread     repartition(conv_id) of the narrow input, the one
+                exchange (none on a conv_id-bucketed input)
+  3. parse      regexp_extract field extraction in Catalyst (parse.py)
+  4. enrich     broadcast role/tool lookups (enrich.py)
+  5. route      first-match-wins sink tagging (route.py)
+  6. order      sortWithinPartitions(sink, conv_id, turn_idx) — stable
+                turn ordering before writes
+  7. write      partitioned (or fan-out) sink writes + agg_counts table
 
 What ``run_pipeline`` records (its return value, the CLI's JSON line):
 ``route_sec`` (call start until the routed rows are written, or
@@ -25,7 +27,7 @@ counted with ``--no-write``), ``total_sec`` (the whole call, so it
 adds the agg_counts aggregate), ``turns``/``turns_per_sec``, and
 ``sink_<name>_rows`` per sink from the written files.  Each snapshot
 commit also logs its own ``write_sec`` (the routed write, which runs
-phases 1-6 except the agg_counts table).
+phases 1-7 except the agg_counts table).
 """
 
 from __future__ import annotations
@@ -41,56 +43,16 @@ from pyspark.sql import functions as F
 from .aggregate import count_connector
 from .catalog import make_catalog, table_uri
 from .checkpoint import SnapshotCatalog
-from .enrich import enrich_turns
-from .parse import parse_turns
-from .route import RoutingRule, SINK_PROJECTIONS, route
+from .config import compile_pipeline
+from .route import SINK_PROJECTIONS
 from .session import get_spark
-
-
-def build_pipeline(
-    turns: DataFrame,
-    rules: list[RoutingRule] | None = None,
-    order_partitions: int | None = None,
-    sort_prefix: tuple[str, ...] = (),
-    prepartitioned: bool = False,
-) -> DataFrame:
-    """The logical plan: parsed, enriched, routed, deterministically
-    ordered turns (one DataFrame; Catalyst owns the physical plan).
-
-    ``prepartitioned=True`` declares that the input scan already
-    delivers conversation-whole partitions — a bucketed table
-    (``CLUSTERED BY (conv_id)``, Iceberg's ``bucket(N, conv_id)``
-    write distribution).  That is the production layout at
-    10^12-turn scale: the table is written bucket-partitioned once,
-    and every downstream pipeline run is then a pure map job — scan →
-    parse → enrich → route → sortWithinPartitions → write, ZERO
-    exchanges — instead of re-shuffling 100 TB of text per run.  The
-    ordering guarantee is identical (hash(conv_id) % B task placement
-    either way); only who does the hashing changes (the writer, once,
-    vs every reader)."""
-    # ONE exchange total (ZERO when prepartitioned): hash-repartition
-    # the NARROW input by conv_id up front.  This simultaneously (a)
-    # spreads a poorly-split small scan across every core for the
-    # CPU-bound parse, (b) shuffles the 6-column input instead of the
-    # post-parse/enrich wide rows, and (c) satisfies the explicit
-    # repartition(conv_id)-before-write requirement.  Parse/enrich/
-    # route are narrow ops after it, and the final ordering is a
-    # shuffle-free sortWithinPartitions.
-    if prepartitioned:
-        spread = turns
-    elif order_partitions:
-        spread = turns.repartition(order_partitions, F.col("conv_id"))
-    else:
-        spread = turns.repartition(F.col("conv_id"))
-    parsed = parse_turns(spread)
-    enriched = enrich_turns(parsed)
-    routed = route(enriched, rules)
-    return routed.sortWithinPartitions(*sort_prefix, "conv_id", "turn_idx")
 
 
 def read_sink(spark: SparkSession, out_dir: str, sink: str) -> DataFrame:
     """Read one routed sink with its exporter-shaped projection applied
-    (partition-pruned scan of the single-pass routed table)."""
+    (partition-pruned scan of the single-pass routed table).  This is
+    the reader of the ``partitioned`` layout that route.py describes:
+    each sink is a partition of one table, projected at read time."""
     proj, _schema = SINK_PROJECTIONS[sink]
     routed = make_catalog(table_uri(out_dir, "routed")).read(spark)
     return proj(routed.filter(F.col("sink") == sink))
@@ -100,7 +62,6 @@ def run_pipeline(
     spark: SparkSession,
     input_path: str | None,
     out_dir: str,
-    rules: list[RoutingRule] | None = None,
     write: bool = True,
     strategy: str = "partitioned",
     warmup: bool = False,
@@ -111,6 +72,9 @@ def run_pipeline(
     _limit: int | None = None,
 ) -> dict:
     """Execute the full job; returns phase metrics (turns/sec etc.).
+
+    The plan is ``compile_pipeline()`` — the default config — run with
+    ``prepartitioned=True`` on a conv_id-bucketed input.
 
     ``partitioned`` (default, the at-scale path): ONE pass over the
     data — parse/enrich/route/order, then ``partitionBy("sink")``
@@ -138,7 +102,6 @@ def run_pipeline(
                 spark,
                 input_path,
                 wdir,
-                rules=rules,
                 write=write,
                 strategy=strategy,
                 warmup=False,
@@ -201,15 +164,8 @@ def run_pipeline(
         turns = spark.read.parquet(input_path)
     if _limit:
         turns = turns.limit(_limit)
-    # Lead the within-partition sort with the sink column when we'll
-    # write partitionBy("sink"): the file writer then keeps the
-    # (conv_id, turn_idx) order instead of injecting its own sort.
-    prefix = ("sink",) if (write and strategy == "partitioned") else ()
-    routed = build_pipeline(
-        turns,
-        rules,
-        sort_prefix=prefix,
-        prepartitioned=bool(bucketed_input) and not _limit,
+    routed = compile_pipeline()(
+        turns, prepartitioned=bool(bucketed_input) and not _limit
     )
 
     metrics: dict = {}

@@ -67,9 +67,14 @@ def compile_rules(
     )
 
 
-def route(df: DataFrame, rules: list[RoutingRule] | None = None) -> DataFrame:
-    """Tag every row with its destination sink (no data movement)."""
-    return df.withColumn("sink", compile_rules(rules))
+def route(
+    df: DataFrame,
+    rules: list[RoutingRule] | None = None,
+    default: str = DEFAULT_SINK,
+) -> DataFrame:
+    """Tag every row with its destination sink (no data movement);
+    rows no rule matches go to ``default``."""
+    return df.withColumn("sink", compile_rules(rules, default))
 
 
 # --- per-sink projections (FIXTURES.md §5 shapes) ---------------------

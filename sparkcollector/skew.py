@@ -2,9 +2,9 @@
 
 North-rule requirements made explicit here:
 
-* **stable turn ordering** — ``job.build_pipeline`` does
+* **stable turn ordering** — ``config.compile_pipeline`` does
   ``repartition(conv_id)`` +
-  ``sortWithinPartitions(conv_id, turn_idx)`` before sink writes, so
+  ``sortWithinPartitions(sink, conv_id, turn_idx)`` before sink writes, so
   the per-turn text sequence is deterministic across runs and across
   parallelism levels (local[8] vs local[32]); ordering comes from the
   sort, never from task scheduling (SURVEY.md §7.3 hard part 2).

@@ -9,8 +9,11 @@ reference's native shape:
 * file-source ingest (the filelog receiver analog — new files under a
   directory are discovered and checkpointed exactly-once, matching the
   ``file_storage`` offset store, splunk_logs_config_linux.yaml:21-27),
-* identical parse/enrich/route stages (the SAME functions as batch —
-  one logical plan, two execution modes),
+* identical exclude/parse/enrich/transform/route stages: a streaming
+  input goes through the SAME ``config.compile_pipeline`` function as
+  the batch job, which leaves out only the repartition and the sort
+  (Structured Streaming rejects the sort; :func:`write_stream_sinks`
+  orders each epoch) — one logical plan, two execution modes,
 * watermarked 1-minute windowed counts (the count connector under late
   data; watermark bounds state like the batch processor's timeout),
 * ``foreachBatch`` fan-out appends into the same SnapshotCatalog sink
@@ -29,9 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..aggregate import N_CONV_BUCKETS, conv_bucket
-from ..enrich import enrich_turns
-from ..parse import parse_turns
-from ..route import RoutingRule, route
 from ..schema import TRANSCRIPTS_SCHEMA
 
 
@@ -43,16 +43,6 @@ def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "8")
         .parquet(input_dir)
     )
-
-
-def stream_routed(
-    turns: DataFrame, rules: list[RoutingRule] | None = None
-) -> DataFrame:
-    """Parse + enrich + route on a streaming DataFrame — the same
-    narrow stages as the batch plan; no repartition needed (micro-batch
-    boundaries give per-epoch determinism, ordering is restored by the
-    sink sort in foreachBatch)."""
-    return route(enrich_turns(parse_turns(turns)), rules)
 
 
 def windowed_counts(

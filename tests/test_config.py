@@ -10,14 +10,36 @@ from pyspark.sql import functions as F
 from sparkcollector.config import compile_pipeline, dry_run
 
 
-def test_default_config_matches_build_pipeline(spark, turns_df):
-    from sparkcollector.job import build_pipeline
+def _plan_nodes(node):
+    """Every node of a physical plan (the pre-stage plan under AQE)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.inputPlan()
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
 
-    got = compile_pipeline()(turns_df)
-    exp = build_pipeline(turns_df)
-    a = sorted(tuple(r) for r in got.select("conv_id", "turn_idx", "sink").collect())
-    b = sorted(tuple(r) for r in exp.select("conv_id", "turn_idx", "sink").collect())
-    assert a == b
+
+def test_config_plan_shuffles_the_narrow_input_once(turns_df):
+    """With exclude and transform stages configured, the plan still has
+    one conv_id exchange, and it moves the unparsed input rows."""
+    cfg = {
+        "pipeline": {
+            "exclude": [{"column": "role", "items": ["tool"]}],
+            "transform": [{"set": "body_len", "expr": "length(text)"}],
+        }
+    }
+    plan = compile_pipeline(cfg)(turns_df)._jdf.queryExecution().executedPlan()
+    exchanges = [
+        n
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "Exchange"
+        and n.outputPartitioning().toString().startswith("hashpartitioning(conv_id#")
+    ]
+    assert len(exchanges) == 1, plan.toString()
+    child_out = exchanges[0].child().output()
+    cols = {child_out.apply(i).name() for i in range(child_out.size())}
+    assert not cols & {"severity", "sink"}, cols
 
 
 def test_exclude_filter_stage(spark, turns_df):
@@ -31,7 +53,7 @@ def test_custom_route_rules(spark, turns_df):
     cfg = {
         "pipeline": {
             "parse": {"engine": "off"},
-            "enrich": {},
+            "enrich": False,
             "route": {"rules": [{"predicate": "role = 'user'", "sink": "metrics"}]},
             "order": None,
         }
@@ -49,7 +71,7 @@ def test_transform_statements(spark, turns_df):
     cfg = {
         "pipeline": {
             "parse": {"engine": "off"},
-            "enrich": {},
+            "enrich": False,
             "transform": [
                 {"set": "sourcetype", "expr": "'agent:turn'"},
                 {
@@ -69,6 +91,27 @@ def test_transform_statements(spark, turns_df):
         expected = "XmlWinEventLog" if r["role"] == "system" else "agent:turn"
         assert r["sourcetype"] == expected
         assert r["body_len"] == len(r["text"])
+
+
+def test_route_default_takes_unmatched_rows(turns_df):
+    cfg = {
+        "pipeline": {
+            "route": {
+                "rules": [{"predicate": "false", "sink": "traces"}],
+                "default": "metrics",
+            }
+        }
+    }
+    out = compile_pipeline(cfg)(turns_df)
+    sinks = {r["sink"] for r in out.select("sink").distinct().collect()}
+    assert sinks == {"metrics"}
+
+
+def test_enrich_old_dict_is_rejected(turns_df):
+    """enrich is true | false; the old per-dimension flags fail."""
+    run = compile_pipeline({"pipeline": {"enrich": {"role_attrs": True}}})
+    with pytest.raises(ValueError, match="enrich"):
+        run(turns_df)
 
 
 def test_dry_run_prints_effective_config():

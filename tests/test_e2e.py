@@ -18,7 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkcollector.checkpoint import SnapshotCatalog
-from sparkcollector.job import build_pipeline, run_pipeline
+from sparkcollector.config import compile_pipeline
+from sparkcollector.job import run_pipeline
 from sparkcollector.parse import CALL_RE, SPAN_RE
 
 
@@ -44,7 +45,7 @@ def _oracle_sinks(turns_pdf):
 
 @pytest.fixture(scope="module")
 def routed_rows(turns_df):
-    routed = build_pipeline(turns_df)
+    routed = compile_pipeline()(turns_df)
     return routed.select("conv_id", "turn_idx", "text", "sink").collect()
 
 
@@ -74,12 +75,18 @@ def test_per_turn_text_equality_stable_order(routed_rows, turns_pdf):
     )
 
 
-def test_invariant_across_parallelism(turns_df, routed_rows):
-    alt = build_pipeline(turns_df, order_partitions=3)
-    got = {
-        (r["conv_id"], r["turn_idx"], r["sink"])
-        for r in alt.select("conv_id", "turn_idx", "sink").collect()
-    }
+def test_invariant_across_parallelism(spark, turns_df, routed_rows):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")  # the fixture session runs 8
+    try:
+        alt = compile_pipeline()(turns_df)
+        got = {
+            (r["conv_id"], r["turn_idx"], r["sink"])
+            for r in alt.select("conv_id", "turn_idx", "sink").collect()
+        }
+    finally:
+        spark.conf.set(key, before)
     base = {(r["conv_id"], r["turn_idx"], r["sink"]) for r in routed_rows}
     assert got == base
 
@@ -147,14 +154,15 @@ def test_snapshot_resume_full_equals_incremental(spark, turns_df, tmp_path):
     src.append(w.limit(half))
     src.append(w.subtract(w.limit(half)))
 
-    full = build_pipeline(src.read(spark))
-    inc1 = build_pipeline(src.read_since(spark, 0).filter(F.lit(True)))
+    pipeline = compile_pipeline()
+    full = pipeline(src.read(spark))
+    inc1 = pipeline(src.read_since(spark, 0).filter(F.lit(True)))
     n_full = full.count()
     assert n_full == turns_df.count()
 
     # resume: consumer processed snapshot 1, restarts, reads only snap 2
-    resumed = build_pipeline(src.read_since(spark, 1))
-    first = build_pipeline(src.read_since(spark, 0)).count()
+    resumed = pipeline(src.read_since(spark, 1))
+    first = pipeline(src.read_since(spark, 0)).count()
     assert resumed.count() + half == first
 
 
@@ -181,10 +189,8 @@ def test_bucketed_input_shuffle_free_pipeline(spark, turns_df, tmp_path):
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
-    routed = build_pipeline(
-        spark.table("transcripts_bucketed"),
-        sort_prefix=("sink",),
-        prepartitioned=True,
+    routed = compile_pipeline()(
+        spark.table("transcripts_bucketed"), prepartitioned=True
     )
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert not re.search(r"Exchange (hash|range|SinglePartition|RoundRobin)", plan), plan

@@ -43,9 +43,9 @@ def _broadcast_sides(plan: str) -> list[str]:
 def test_enrich_dims_are_local_relations(turns_df):
     """Both dimensions broadcast from an in-memory LocalTableScan: no
     pickled-RDD scan, so no Python worker runs outside the parse."""
-    from sparkcollector.job import build_pipeline
+    from sparkcollector.config import compile_pipeline
 
-    for df in (enrich_turns(turns_df), build_pipeline(turns_df)):
+    for df in (enrich_turns(turns_df), compile_pipeline()(turns_df)):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         plan = plan.split("== Initial Plan ==")[0]  # the AQE final plan

@@ -7,9 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkcollector.checkpoint import SnapshotCatalog
+from sparkcollector.config import compile_pipeline
 from sparkcollector.streaming import (
     conversation_sessions,
-    stream_routed,
+    stream_dedup_once,
     stream_transcripts,
     windowed_counts,
     write_stream_sinks,
@@ -27,7 +28,7 @@ def stream_input(spark, turns_path, tmp_path_factory):
 
 
 def test_stream_matches_batch_sinks(spark, stream_input, turns_df, tmp_path):
-    routed = stream_routed(stream_transcripts(spark, stream_input))
+    routed = compile_pipeline()(stream_transcripts(spark, stream_input))
     q = write_stream_sinks(
         routed, str(tmp_path / "out"), str(tmp_path / "ck")
     )
@@ -39,12 +40,11 @@ def test_stream_matches_batch_sinks(spark, stream_input, turns_df, tmp_path):
         r["sink"]: r["n"]
         for r in got.groupBy("sink").agg(F.count("*").alias("n")).collect()
     }
-    # batch pipeline gives identical per-sink counts
-    from sparkcollector.job import build_pipeline
-
+    # the same compiled pipeline over the batch input gives identical
+    # per-sink counts
     expected = {
         r["sink"]: r["n"]
-        for r in build_pipeline(turns_df)
+        for r in compile_pipeline()(turns_df)
         .groupBy("sink")
         .agg(F.count("*").alias("n"))
         .collect()
@@ -53,7 +53,7 @@ def test_stream_matches_batch_sinks(spark, stream_input, turns_df, tmp_path):
 
 
 def test_windowed_counts_stream(spark, stream_input, turns_df, tmp_path):
-    routed = stream_routed(stream_transcripts(spark, stream_input))
+    routed = compile_pipeline()(stream_transcripts(spark, stream_input))
     counts = windowed_counts(routed)
     q = (
         counts.writeStream.format("memory")
@@ -104,7 +104,6 @@ def test_stream_dedup_once_drops_cross_batch_duplicates(spark, tmp_path):
     from datetime import datetime
 
     from sparkcollector.schema import TRANSCRIPTS_SCHEMA
-    from sparkcollector.streaming.pipeline import stream_dedup_once
 
     rows = [
         ("c1", 0, "user", "hello", "none", datetime(2024, 1, 1, 0, 0, 0)),
