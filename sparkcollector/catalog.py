@@ -27,7 +27,13 @@ Semantics parity notes (what IcebergCatalog maps onto):
 * current_snapshot_id -> newest row of the ``<ident>.snapshots``
   metadata table.
 * lineage       -> the ``<ident>.files`` metadata table (path, rows,
-  partition), the per-partition lineage manifest.
+  bytes, partition), the per-partition lineage manifest.
+
+File format: both backends write zstd Parquet.  Iceberg's default
+``write.parquet.compression-codec`` is zstd (since 1.4), and
+SnapshotCatalog sets the same codec on every write and turns the
+dictionary off for the free-text columns (``schema.
+FREE_TEXT_COLUMNS``).
 """
 
 from __future__ import annotations
@@ -105,7 +111,8 @@ class IcebergCatalog:
     def append(self, df: DataFrame, metrics: dict | None = None,
                partition_by: list[str] | None = None):
         """Commit ``df`` and return a Snapshot-shaped commit record
-        (snapshot_id, metrics with ``rows``, per-partition ``files``)
+        (snapshot_id, metrics with ``rows`` and ``bytes`` added by the
+        commit, per-partition ``files`` with their ``bytes``)
         assembled from the ``.snapshots`` / ``.files`` metadata tables
         — the same duck type job.py consumes from SnapshotCatalog."""
         spark = df.sparkSession
@@ -136,13 +143,17 @@ class IcebergCatalog:
             "ORDER BY committed_at DESC LIMIT 1"
         ).collect()[0]
         summary = dict(row["summary"] or {})
-        m = {"rows": int(summary.get("added-records", 0)), **(metrics or {})}
+        m = {
+            "rows": int(summary.get("added-records", 0)),
+            "bytes": int(summary.get("added-files-size", 0)),
+            **(metrics or {}),
+        }
         files = [
-            {"path": r["path"], "rows": r["rows"],
+            {"path": r["path"], "rows": r["rows"], "bytes": r["bytes"],
              **(r["partition"].asDict() if r["partition"] is not None else {})}
             for r in spark.sql(
                 f"SELECT file_path AS path, record_count AS rows, "
-                f"partition FROM {self.ident}.files"
+                f"file_size_in_bytes AS bytes, partition FROM {self.ident}.files"
             ).collect()
         ]
         from .checkpoint import Snapshot
@@ -207,7 +218,7 @@ class IcebergCatalog:
             r.asDict()
             for r in spark.sql(
                 f"SELECT file_path AS path, record_count AS rows, "
-                f"partition FROM {self.ident}.files"
+                f"file_size_in_bytes AS bytes, partition FROM {self.ident}.files"
             ).collect()
         ]
 

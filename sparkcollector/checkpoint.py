@@ -13,13 +13,22 @@ directories — deliberately shaped like Iceberg's metadata model
 catalog on a cluster is a one-line change in job.py:
 
 * :meth:`SnapshotCatalog.append` writes a data directory and commits a
-  snapshot entry recording every file (path, rows) — the per-partition
-  lineage manifest — plus phase metrics (rows/sec).
+  snapshot entry recording every file (path, rows, bytes) — the
+  per-partition lineage manifest — plus phase metrics (rows, bytes,
+  rows/sec).
 * :meth:`SnapshotCatalog.read_since` reads only files committed after a
   given snapshot id — incremental consumption, the ``start_at:
   beginning`` vs resume distinction (yaml:49).
 * Commits are atomic (write-temp + ``os.replace``), so a failed job
   never corrupts the log — mirroring Iceberg's optimistic commit.
+
+File format: every table (routed, agg_counts, fan-out sinks, streaming
+epochs, compactions) is Parquet compressed with zstd at Spark's default
+level — Iceberg's default ``write.parquet.compression-codec``, so both
+catalog backends write the same codec.  The free-text columns
+(``schema.FREE_TEXT_COLUMNS``) are written without a dictionary: their
+near-unique values would fall back to PLAIN anyway.  Every other column
+keeps Parquet's dictionary encoding.
 """
 
 from __future__ import annotations
@@ -32,12 +41,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .schema import FREE_TEXT_COLUMNS
+
 
 @dataclass
 class Snapshot:
     snapshot_id: int
     ts: float
-    files: list[dict]  # [{path, rows, <partition cols...>}]
+    files: list[dict]  # [{path, rows, bytes, <partition cols...>}]
     metrics: dict = field(default_factory=dict)
     data_dir: str | None = None  # set for hive-partitioned snapshots
 
@@ -80,12 +91,17 @@ class SnapshotCatalog:
         ``partition_by`` writes hive-style partition dirs (the Iceberg
         identity-partition analog); lineage records each file with its
         partition values.  Per-file row counts come from parquet
-        footers — metadata-only, no data scan.
+        footers and byte sizes from the file system — metadata-only, no
+        data scan.  The format is the module docstring's: zstd, free
+        text without a dictionary.
         """
         t0 = time.time()
         snap_id = (self.current_snapshot_id() or 0) + 1
         data_dir = os.path.join(self.table_dir, f"data-{snap_id:06d}")
-        w = df.write.mode("overwrite")
+        w = df.write.mode("overwrite").option("compression", "zstd")
+        for c in FREE_TEXT_COLUMNS:
+            if c in df.columns:
+                w = w.option(f"parquet.enable.dictionary#{c}", "false")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(data_dir)
@@ -93,13 +109,14 @@ class SnapshotCatalog:
         import pyarrow.parquet as pq
 
         files = []
-        total_rows = 0
+        total_rows = total_bytes = 0
         for root, _dirs, names in sorted(os.walk(data_dir)):
             for name in sorted(names):
                 if name.endswith(".parquet"):
                     p = os.path.join(root, name)
                     rows = pq.ParquetFile(p).metadata.num_rows
-                    entry = {"path": p, "rows": rows}
+                    size = os.path.getsize(p)
+                    entry = {"path": p, "rows": rows, "bytes": size}
                     rel = os.path.relpath(root, data_dir)
                     if rel != ".":
                         for part in rel.split(os.sep):
@@ -107,10 +124,12 @@ class SnapshotCatalog:
                             entry[k] = v
                     files.append(entry)
                     total_rows += rows
+                    total_bytes += size
 
         elapsed = time.time() - t0
         m = {
             "rows": total_rows,
+            "bytes": total_bytes,
             "files": len(files),
             "write_sec": round(elapsed, 3),
             "rows_per_sec": round(total_rows / elapsed, 1) if elapsed else None,

@@ -29,7 +29,9 @@ which is exactly what ``job.run_pipeline`` runs)::
       order: true                               # sink, conv_id, turn_idx
 
 ``enrich`` and ``order`` take true | false (null counts as false);
-anything else raises ``ValueError`` naming the key.
+anything else raises ``ValueError`` naming the key.  A ``route`` without
+``rules`` (or with ``rules: null``) keeps ``route.DEFAULT_RULES``;
+``rules: []`` means no rules, so every row goes to ``route.default``.
 """
 
 from __future__ import annotations
@@ -241,8 +243,12 @@ def compile_pipeline(
                 value = F.when(F.expr(stmt["where"]), value).otherwise(prior)
             df = df.withColumn(stmt["set"], value)
         rt = cfg.get("route") or {}
-        rules = [RoutingRule(r["predicate"], r["sink"]) for r in rt.get("rules", [])]
-        df = route(df, rules or None, rt.get("default", DEFAULT_SINK))
+        # A missing (or null) rules key keeps DEFAULT_RULES; an empty
+        # list means no rules, so every row goes to route.default.
+        rules = rt.get("rules")
+        if rules is not None:
+            rules = [RoutingRule(r["predicate"], r["sink"]) for r in rules]
+        df = route(df, rules, rt.get("default", DEFAULT_SINK))
         if _switch(cfg, "order") and not df.isStreaming:
             df = df.sortWithinPartitions("sink", "conv_id", "turn_idx")
         return df

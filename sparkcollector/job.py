@@ -24,10 +24,13 @@ Catalyst pipelines them, so they are not timed one by one):
 What ``run_pipeline`` records (its return value, the CLI's JSON line):
 ``route_sec`` (call start until the routed rows are written, or
 counted with ``--no-write``), ``total_sec`` (the whole call, so it
-adds the agg_counts aggregate), ``turns``/``turns_per_sec``, and
-``sink_<name>_rows`` per sink from the written files.  Each snapshot
-commit also logs its own ``write_sec`` (the routed write, which runs
-phases 1-7 except the agg_counts table).
+adds the agg_counts aggregate), ``turns``/``turns_per_sec``,
+``sink_<name>_rows`` per sink from the written files, and
+``written_bytes``: the on-disk size of the parquet files this run
+committed to the routed (or fan-out sink) tables and agg_counts, summed
+from the snapshot lineage with no extra scan (0 with ``--no-write``).
+Each snapshot commit also logs its own ``write_sec`` (the routed write,
+which runs phases 1-7 except the agg_counts table) and ``bytes``.
 """
 
 from __future__ import annotations
@@ -169,6 +172,7 @@ def run_pipeline(
     )
 
     metrics: dict = {}
+    written = 0
     if not write:
         n_turns = routed.count()
         t_routed = time.time()
@@ -194,7 +198,8 @@ def run_pipeline(
                 "sink", "conv_id", "role", "tool", "ts"
             )
         )
-        make_catalog(table_uri(out_dir, "agg_counts")).append(counts)
+        agg = make_catalog(table_uri(out_dir, "agg_counts")).append(counts)
+        written = snap.metrics["bytes"] + agg.metrics["bytes"]
     else:  # fanout
         routed.persist()
         try:
@@ -204,9 +209,11 @@ def run_pipeline(
                 cat = make_catalog(table_uri(out_dir, f"sink_{s}"))
                 snap = cat.append(proj(routed.filter(F.col("sink") == s)))
                 metrics[f"sink_{s}_rows"] = snap.metrics["rows"]
-            make_catalog(table_uri(out_dir, "agg_counts")).append(
+                written += snap.metrics["bytes"]
+            agg = make_catalog(table_uri(out_dir, "agg_counts")).append(
                 count_connector(routed)
             )
+            written += agg.metrics["bytes"]
         finally:
             routed.unpersist()
 
@@ -220,6 +227,7 @@ def run_pipeline(
             "route_sec": round(t_routed - t0, 3),
             "total_sec": round(elapsed, 3),
             "turns_per_sec": round(n_turns / elapsed, 1),
+            "written_bytes": written,
         }
     )
     if last_snap is not None:

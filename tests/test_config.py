@@ -107,6 +107,32 @@ def test_route_default_takes_unmatched_rows(turns_df):
     assert sinks == {"metrics"}
 
 
+def _sink_counts(df):
+    return {
+        r["sink"]: r["n"]
+        for r in df.groupBy("sink").agg(F.count("*").alias("n")).collect()
+    }
+
+
+def test_empty_route_rules_send_every_row_to_default(turns_df):
+    """``rules: []`` is no rules, not "use the default rules"."""
+    cfg = {"pipeline": {"route": {"rules": [], "default": "metrics"}}}
+    out = compile_pipeline(cfg)(turns_df)
+    assert _sink_counts(out) == {"metrics": turns_df.count()}
+
+
+def test_route_with_only_default_keeps_default_rules(turns_df):
+    """A route dict without ``rules`` keeps DEFAULT_RULES: spans still go
+    to traces and severity lines to events; only unmatched rows move."""
+    base = _sink_counts(compile_pipeline()(turns_df))
+    got = _sink_counts(
+        compile_pipeline({"pipeline": {"route": {"default": "traces"}}})(turns_df)
+    )
+    assert got["metrics"] == base["metrics"] > 0
+    assert 0 < got["events"] < base["events"]
+    assert got["events"] + got["traces"] == base["events"] + base["traces"]
+
+
 def test_enrich_old_dict_is_rejected(turns_df):
     """enrich is true | false; the old per-dimension flags fail."""
     run = compile_pipeline({"pipeline": {"enrich": {"role_attrs": True}}})
