@@ -27,13 +27,11 @@ Semantics parity notes (what IcebergCatalog maps onto):
 * current_snapshot_id -> newest row of the ``<ident>.snapshots``
   metadata table.
 * lineage       -> the ``<ident>.files`` metadata table (path, rows,
-  bytes, partition), the per-partition lineage manifest.
+  partition), the per-partition lineage manifest.
 
-File format: both backends write zstd Parquet.  Iceberg's default
-``write.parquet.compression-codec`` is zstd (since 1.4), and
-SnapshotCatalog sets the same codec on every write and turns the
-dictionary off for the free-text columns (``schema.
-FREE_TEXT_COLUMNS``).
+File format: both backends write zstd-compressed Parquet.  Iceberg's
+default ``write.parquet.compression-codec`` is zstd (since 1.4), and
+SnapshotCatalog sets the same codec on every write.
 """
 
 from __future__ import annotations
@@ -112,7 +110,7 @@ class IcebergCatalog:
                partition_by: list[str] | None = None):
         """Commit ``df`` and return a Snapshot-shaped commit record
         (snapshot_id, metrics with ``rows`` and ``bytes`` added by the
-        commit, per-partition ``files`` with their ``bytes``)
+        commit, per-partition ``files``)
         assembled from the ``.snapshots`` / ``.files`` metadata tables
         — the same duck type job.py consumes from SnapshotCatalog."""
         spark = df.sparkSession
@@ -149,11 +147,11 @@ class IcebergCatalog:
             **(metrics or {}),
         }
         files = [
-            {"path": r["path"], "rows": r["rows"], "bytes": r["bytes"],
+            {"path": r["path"], "rows": r["rows"],
              **(r["partition"].asDict() if r["partition"] is not None else {})}
             for r in spark.sql(
                 f"SELECT file_path AS path, record_count AS rows, "
-                f"file_size_in_bytes AS bytes, partition FROM {self.ident}.files"
+                f"partition FROM {self.ident}.files"
             ).collect()
         ]
         from .checkpoint import Snapshot
@@ -218,7 +216,7 @@ class IcebergCatalog:
             r.asDict()
             for r in spark.sql(
                 f"SELECT file_path AS path, record_count AS rows, "
-                f"file_size_in_bytes AS bytes, partition FROM {self.ident}.files"
+                f"partition FROM {self.ident}.files"
             ).collect()
         ]
 

@@ -13,9 +13,8 @@ directories — deliberately shaped like Iceberg's metadata model
 catalog on a cluster is a one-line change in job.py:
 
 * :meth:`SnapshotCatalog.append` writes a data directory and commits a
-  snapshot entry recording every file (path, rows, bytes) — the
-  per-partition lineage manifest — plus phase metrics (rows, bytes,
-  rows/sec).
+  snapshot entry recording every file (path, rows) — the per-partition
+  lineage manifest — plus phase metrics (rows, bytes, rows/sec).
 * :meth:`SnapshotCatalog.read_since` reads only files committed after a
   given snapshot id — incremental consumption, the ``start_at:
   beginning`` vs resume distinction (yaml:49).
@@ -25,10 +24,9 @@ catalog on a cluster is a one-line change in job.py:
 File format: every table (routed, agg_counts, fan-out sinks, streaming
 epochs, compactions) is Parquet compressed with zstd at Spark's default
 level — Iceberg's default ``write.parquet.compression-codec``, so both
-catalog backends write the same codec.  The free-text columns
-(``schema.FREE_TEXT_COLUMNS``) are written without a dictionary: their
-near-unique values would fall back to PLAIN anyway.  Every other column
-keeps Parquet's dictionary encoding.
+catalog backends write the same codec.  Encodings are Parquet's own:
+dictionary first, falling back to PLAIN where a dictionary does not pay
+(the near-unique free text).
 """
 
 from __future__ import annotations
@@ -41,14 +39,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .schema import FREE_TEXT_COLUMNS
-
 
 @dataclass
 class Snapshot:
     snapshot_id: int
     ts: float
-    files: list[dict]  # [{path, rows, bytes, <partition cols...>}]
+    files: list[dict]  # [{path, rows, <partition cols...>}]
     metrics: dict = field(default_factory=dict)
     data_dir: str | None = None  # set for hive-partitioned snapshots
 
@@ -91,17 +87,14 @@ class SnapshotCatalog:
         ``partition_by`` writes hive-style partition dirs (the Iceberg
         identity-partition analog); lineage records each file with its
         partition values.  Per-file row counts come from parquet
-        footers and byte sizes from the file system — metadata-only, no
-        data scan.  The format is the module docstring's: zstd, free
-        text without a dictionary.
+        footers and the snapshot's ``bytes`` from the file system —
+        metadata-only, no data scan.  Files are zstd Parquet (module
+        docstring).
         """
         t0 = time.time()
         snap_id = (self.current_snapshot_id() or 0) + 1
         data_dir = os.path.join(self.table_dir, f"data-{snap_id:06d}")
         w = df.write.mode("overwrite").option("compression", "zstd")
-        for c in FREE_TEXT_COLUMNS:
-            if c in df.columns:
-                w = w.option(f"parquet.enable.dictionary#{c}", "false")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(data_dir)
@@ -115,8 +108,7 @@ class SnapshotCatalog:
                 if name.endswith(".parquet"):
                     p = os.path.join(root, name)
                     rows = pq.ParquetFile(p).metadata.num_rows
-                    size = os.path.getsize(p)
-                    entry = {"path": p, "rows": rows, "bytes": size}
+                    entry = {"path": p, "rows": rows}
                     rel = os.path.relpath(root, data_dir)
                     if rel != ".":
                         for part in rel.split(os.sep):
@@ -124,7 +116,7 @@ class SnapshotCatalog:
                             entry[k] = v
                     files.append(entry)
                     total_rows += rows
-                    total_bytes += size
+                    total_bytes += os.path.getsize(p)
 
         elapsed = time.time() - t0
         m = {

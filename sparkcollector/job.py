@@ -27,8 +27,9 @@ counted with ``--no-write``), ``total_sec`` (the whole call, so it
 adds the agg_counts aggregate), ``turns``/``turns_per_sec``,
 ``sink_<name>_rows`` per sink from the written files, and
 ``written_bytes``: the on-disk size of the parquet files this run
-committed to the routed (or fan-out sink) tables and agg_counts, summed
-from the snapshot lineage with no extra scan (0 with ``--no-write``).
+committed to the routed (or fan-out sink) tables and agg_counts, the
+sum of those snapshots' ``bytes`` with no extra scan (0 with
+``--no-write``).
 Each snapshot commit also logs its own ``write_sec`` (the routed write,
 which runs phases 1-7 except the agg_counts table) and ``bytes``.
 """

@@ -85,9 +85,3 @@ SINK_TRACES_SCHEMA = T.StructType(
 )
 
 SINKS = ("metrics", "events", "traces")
-
-# Per-turn free text: the routed table's ``text`` and the events sink's
-# ``body``.  Near-unique values always fall back from dictionary to
-# PLAIN encoding, so the snapshot writer turns the dictionary off for
-# these columns instead of building one and discarding it.
-FREE_TEXT_COLUMNS = ("text", "body")

@@ -42,6 +42,29 @@ def turns_df(spark, turns_path):
     return spark.read.parquet(turns_path)
 
 
+@pytest.fixture(scope="session")
+def assert_zstd():
+    """``check(snap, *keeps_dict)``: every column chunk of the
+    snapshot's files is ZSTD, and each column in ``keeps_dict`` has a
+    dictionary page in every chunk (the codec leaves encodings alone)."""
+    import pyarrow.parquet as pq
+
+    def check(snap, *keeps_dict):
+        seen = set()
+        for f in snap.files:
+            md = pq.ParquetFile(f["path"]).metadata
+            for g in range(md.num_row_groups):
+                for i in range(md.num_columns):
+                    c = md.row_group(g).column(i)
+                    seen.add(c.path_in_schema)
+                    assert c.compression == "ZSTD", (f["path"], c.path_in_schema)
+                    if c.path_in_schema in keeps_dict:
+                        assert c.has_dictionary_page, (c.path_in_schema, c.encodings)
+        assert seen and set(keeps_dict) <= seen, seen
+
+    return check
+
+
 def pytest_addoption(parser):
     parser.addoption(
         "--run-iceberg",

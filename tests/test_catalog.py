@@ -140,8 +140,7 @@ class _FakeSession:
             )
         if ".files" in q:
             return _FakeQuery(
-                [_FakeRow(path="f1.parquet", rows=self._added, bytes=640,
-                          partition=None)]
+                [_FakeRow(path="f1.parquet", rows=self._added, partition=None)]
             )
         if q.startswith("SHOW TBLPROPERTIES"):
             return _FakeQuery(
@@ -185,9 +184,7 @@ def test_iceberg_append_existing_table_appends(monkeypatch):
     assert snap.snapshot_id == 991
     assert snap.metrics["rows"] == 5 and snap.metrics["epoch"] == 3
     assert snap.metrics["bytes"] == 640  # the summary's added-files-size
-    assert snap.files == [{"path": "f1.parquet", "rows": 5, "bytes": 640}]
-    files_sql = [c[1] for c in rec.calls if c[0] == "sql" and ".files" in c[1]]
-    assert files_sql and "file_size_in_bytes AS bytes" in files_sql[0]
+    assert snap.files == [{"path": "f1.parquet", "rows": 5}]
 
 
 def test_iceberg_append_new_table_creates_partitioned(monkeypatch):

@@ -49,12 +49,13 @@ def test_time_travel_read_at(spark, tmp_path):
         cat.read_at(spark, 0)
 
 
-def test_compact_preserves_data_and_time_travel(spark, tmp_path):
+def test_compact_preserves_data_and_time_travel(spark, tmp_path, assert_zstd):
     cat = SnapshotCatalog(str(tmp_path / "tbl"))
     cat.append(spark.range(10))
     cat.append(spark.range(10, 30))
     snap = cat.compact(spark, target_partitions=1)
     assert snap.metrics["compacted_through"] == 2
+    assert_zstd(snap)  # the rewrite keeps the table's codec
     # current read sees the single compacted snapshot, same data
     assert cat.read(spark).count() == 30
     live = [s for s in cat.snapshots() if "superseded_by" not in s.metrics]

@@ -134,7 +134,24 @@ def test_read_sink_projection(spark, turns_df, tmp_path):
     assert ev.count() > 0
 
 
-def test_fanout_strategy_counts_match(spark, turns_df, tmp_path):
+def _same_rows(got, want):
+    got = got.select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_fanout_strategy_counts_match(spark, turns_df, tmp_path, assert_zstd):
+    """Both strategies write the same sink rows as zstd Parquet, and
+    ``written_bytes`` is the on-disk size of every table the run wrote:
+    routed + agg_counts, or the three fan-out sinks + agg_counts."""
+    import glob
+    import os
+
+    from sparkcollector.aggregate import count_connector
+    from sparkcollector.job import read_sink
+    from sparkcollector.route import SINK_PROJECTIONS
+
     m1 = run_pipeline(
         spark, turns_df.inputFiles()[0].replace("file:", ""),
         str(tmp_path / "o1"), strategy="partitioned",
@@ -145,6 +162,33 @@ def test_fanout_strategy_counts_match(spark, turns_df, tmp_path):
     )
     for k in ("sink_metrics_rows", "sink_events_rows", "sink_traces_rows", "turns"):
         assert m1[k] == m2[k], k
+
+    for out, m, n_tables in ((tmp_path / "o1", m1, 2), (tmp_path / "o2", m2, 4)):
+        tables = sorted(glob.glob(str(out / "*")))
+        snaps = [SnapshotCatalog(d).snapshots()[-1] for d in tables]
+        assert len(snaps) == n_tables
+        for d, snap in zip(tables, snaps):
+            on_disk = sum(
+                os.path.getsize(p)
+                for p in glob.glob(os.path.join(d, "data-*", "**", "*.parquet"),
+                                   recursive=True)
+            )
+            assert snap.metrics["bytes"] == on_disk > 0
+        assert m["written_bytes"] == sum(s.metrics["bytes"] for s in snaps)
+
+    routed = compile_pipeline()(turns_df)
+    o1_routed = SnapshotCatalog(str(tmp_path / "o1" / "routed"))
+    o1_agg = SnapshotCatalog(str(tmp_path / "o1" / "agg_counts"))
+    o2_events = SnapshotCatalog(str(tmp_path / "o2" / "sink_events"))
+    assert_zstd(o1_routed.snapshots()[-1], "role")
+    assert_zstd(o1_agg.snapshots()[-1], "role")
+    assert_zstd(o2_events.snapshots()[-1], "source")
+    for s, (proj, _) in SINK_PROJECTIONS.items():
+        want = proj(routed.filter(F.col("sink") == s))
+        _same_rows(read_sink(spark, str(tmp_path / "o1"), s), want)
+        if s == "events":
+            _same_rows(o2_events.read_since(spark, 0), want)
+    _same_rows(o1_agg.read_since(spark, 0), count_connector(routed))
 
 
 def test_snapshot_resume_full_equals_incremental(spark, turns_df, tmp_path):

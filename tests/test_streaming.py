@@ -27,13 +27,16 @@ def stream_input(spark, turns_path, tmp_path_factory):
     return str(d)
 
 
-def test_stream_matches_batch_sinks(spark, stream_input, turns_df, tmp_path):
+def test_stream_matches_batch_sinks(
+    spark, stream_input, turns_df, tmp_path, assert_zstd
+):
     routed = compile_pipeline()(stream_transcripts(spark, stream_input))
     q = write_stream_sinks(
         routed, str(tmp_path / "out"), str(tmp_path / "ck")
     )
     q.awaitTermination(120)
     cat = SnapshotCatalog(str(tmp_path / "out") + "/routed")
+    assert_zstd(cat.snapshots()[-1], "role")  # the epoch's files
     got = cat.read(spark)
     assert got.count() == turns_df.count()
     sinks = {
