@@ -43,6 +43,40 @@ def codegen_spans(df_fn, spark) -> int:
     return len(set(re.findall(r"\[codegen id : (\d+)\]", p)))
 
 
+def no_suffix_frame(p: str) -> bool:
+    """No ``rowsBetween(currentRow, unboundedFollowing)`` window frame:
+    Spark re-aggregates such a suffix for every row, O(grid^2) on a
+    cents grid.  The classifier confusion sweep takes its suffix sums
+    as whole-partition minus exclusive prefix instead."""
+    return "currentrow$(), unboundedfollowing$()" not in p.lower()
+
+
+SWEEP_FRAME_CHECK = (
+    "O(grid) suffix sums (no currentrow..unboundedfollowing frame)",
+    no_suffix_frame,
+)
+
+
+def suffix_frame_fixture(spark):
+    """The confusion sweep as it was before its O(grid) fix: suffix
+    sums over ``rowsBetween(0, Window.unboundedFollowing)``.  The
+    ``no_suffix_frame`` guard must reject its plan."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from sparkcollector.operators.analytics import _cents_grid
+
+    scored = spark.range(1000).select(
+        (F.col("id") % 97 / 100).alias("s"), (F.col("id") % 2).alias("y")
+    )
+    w = Window.orderBy("v").rowsBetween(0, Window.unboundedFollowing)
+    return _cents_grid(scored, F.col("s"), F.col("y")).select(
+        "v",
+        F.sum("pos").over(w).alias("tp"),
+        F.sum(F.col("c") - F.col("pos")).over(w).alias("fp"),
+    )
+
+
 _FAILED: list = []
 
 
@@ -207,6 +241,17 @@ def main() -> None:
         out,
         "IVF multi-assign + same-cluster join replaced the O(n^2) "
         "broadcast self-join in round 2.",
+        spark=spark,
+    )
+
+    # 9. the confusion-sweep guard fires on the pre-fix suffix frame,
+    #    so its passes on the sweep entries below are not vacuous.
+    all_ok &= audit(
+        "suffix_frame_guard_fixture",
+        lambda: suffix_frame_fixture(spark),
+        [("guard rejects rowsBetween(0, unboundedFollowing)",
+          lambda p: not no_suffix_frame(p))],
+        out,
         spark=spark,
     )
 
@@ -4298,7 +4343,8 @@ def main() -> None:
         ("mcc_best_threshold",
          [("confusion sweep from two cumulative grid windows + "
            "rank-1 argmax",
-           lambda p: "Window" in p and "Python" not in p)], ""),
+           lambda p: "Window" in p and "Python" not in p),
+          SWEEP_FRAME_CHECK], ""),
         ("speaker_dominance",
          [("gaps-and-islands run windows + keyed aggregates",
            lambda p: "Window" in p and "Python" not in p)], ""),
@@ -4443,7 +4489,8 @@ def main() -> None:
            lambda p: "Window" in p and "Python" not in p)], ""),
         ("decision_curve_net_benefit",
          [("MCC-sweep confusion windows + bounded threshold list",
-           lambda p: "Window" in p and "Python" not in p)], ""),
+           lambda p: "Window" in p and "Python" not in p),
+          SWEEP_FRAME_CHECK], ""),
         ("auditd_parse",
          [("envelope regex + per-key anchored extraction, map-only",
            lambda p: "Join" not in p and "Window" not in p
@@ -4515,7 +4562,8 @@ def main() -> None:
            lambda p: "Window" in p and "Python" not in p)], ""),
         ("youden_j_threshold",
          [("cents-grid confusion sweep + rank-1 argmax",
-           lambda p: "Window" in p and "Python" not in p)], ""),
+           lambda p: "Window" in p and "Python" not in p),
+          SWEEP_FRAME_CHECK], ""),
         ("surprisal_outliers",
          [("bounded cell grid + top-k rank window",
            lambda p: "Window" in p and "Python" not in p)], ""),

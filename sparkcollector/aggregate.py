@@ -29,26 +29,21 @@ def conv_bucket(col: str = "conv_id", n_buckets: int = N_CONV_BUCKETS):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
 
 
-def count_connector(
-    df: DataFrame,
-    window: str = "1 minute",
-    n_buckets: int = N_CONV_BUCKETS,
-    extra_keys: list[str] = ("sink",),
-) -> DataFrame:
+def count_connector(df: DataFrame) -> DataFrame:
     """Per-sink grouped counts (the north rule's agg_counts output).
 
     Output: (sink, conv_bucket, role, tool, window_start, n) — FIXTURES
-    §5.4.  One shuffle; Catalyst does map-side partial counts, so the
-    reduce side receives at most |groups| × map-partitions rows.
+    §5.4, over 1-minute windows and ``N_CONV_BUCKETS`` conv_id buckets.
+    One shuffle; Catalyst does map-side partial counts, so the reduce
+    side receives at most |groups| × map-partitions rows.
     """
-    keys = [
-        *extra_keys,
-        conv_bucket(n_buckets=n_buckets).alias("conv_bucket"),
+    return df.groupBy(
+        "sink",
+        conv_bucket().alias("conv_bucket"),
         "role",
         "tool",
-        F.window("ts", window).start.alias("window_start"),
-    ]
-    return df.groupBy(*keys).agg(F.count("*").alias("n"))
+        F.window("ts", "1 minute").start.alias("window_start"),
+    ).agg(F.count("*").alias("n"))
 
 
 def sum_connector(

@@ -27,7 +27,9 @@ Semantics parity notes (what IcebergCatalog maps onto):
 * current_snapshot_id -> newest row of the ``<ident>.snapshots``
   metadata table.
 * lineage       -> the ``<ident>.files`` metadata table (path, rows,
-  partition), the per-partition lineage manifest.
+  partition) of every live file, the per-partition lineage manifest;
+  a commit record lists only its own ADDED files, from
+  ``<ident>.entries``.
 
 File format: both backends write zstd-compressed Parquet.  Iceberg's
 default ``write.parquet.compression-codec`` is zstd (since 1.4), and
@@ -110,9 +112,9 @@ class IcebergCatalog:
                partition_by: list[str] | None = None):
         """Commit ``df`` and return a Snapshot-shaped commit record
         (snapshot_id, metrics with ``rows`` and ``bytes`` added by the
-        commit, per-partition ``files``)
-        assembled from the ``.snapshots`` / ``.files`` metadata tables
-        — the same duck type job.py consumes from SnapshotCatalog."""
+        commit, the per-partition ``files`` it added) assembled from the
+        ``.snapshots`` / ``.entries`` metadata tables — the same duck
+        type job.py consumes from SnapshotCatalog."""
         spark = df.sparkSession
         if not iceberg_available(spark):
             raise RuntimeError(
@@ -146,12 +148,16 @@ class IcebergCatalog:
             "bytes": int(summary.get("added-files-size", 0)),
             **(metrics or {}),
         }
+        # this commit's files only: its ADDED (status 1) manifest
+        # entries; ``.files`` would list every live file of the table
         files = [
             {"path": r["path"], "rows": r["rows"],
              **(r["partition"].asDict() if r["partition"] is not None else {})}
             for r in spark.sql(
-                f"SELECT file_path AS path, record_count AS rows, "
-                f"partition FROM {self.ident}.files"
+                "SELECT data_file.file_path AS path, "
+                "data_file.record_count AS rows, "
+                f"data_file.partition AS partition FROM {self.ident}.entries "
+                f"WHERE snapshot_id = {int(row['snapshot_id'])} AND status = 1"
             ).collect()
         ]
         from .checkpoint import Snapshot

@@ -15,6 +15,88 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def _ordered_series(
+    df: DataFrame, key_col: str, order_col: str, value_col: str
+):
+    """Per key, the ``value_col`` series in ``order_col`` order: a
+    ``(key, _pts)`` frame with ``_pts`` the sorted ``(o, x)`` structs,
+    and ``xs``, the column of its values that the in-row folds run
+    over.  One grouped pass; state O(points-per-key)."""
+    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col(order_col).alias("o"),
+                    F.col(value_col).cast("double").alias("x"),
+                )
+            )
+        ).alias("_pts")
+    )
+    return per_key, F.transform("_pts", lambda p: p["x"])
+
+
+def _cents_grid(df: DataFrame, score_col, label_col) -> DataFrame:
+    """``(v, c, pos)``: rows and positive labels per distinct score,
+    the score rounded to integer cents — the bounded grid the binary
+    classifier statistics run on instead of raw rows."""
+    return df.select(
+        F.round(score_col.cast("double") * 100).cast("long").alias("v"),
+        label_col.cast("double").alias("y"),
+    ).groupBy("v").agg(
+        F.count(F.lit(1)).cast("double").alias("c"),
+        F.sum("y").alias("pos"),
+    )
+
+
+def _midrank_auc(df: DataFrame, score_col, label_col):
+    """Rank-sum AUC with midranks for ties over the cents grid: the
+    one-row ``(rpos, npos, nneg)`` reduction, and the AUC column
+    ``U/(n+ n-)`` to select from it."""
+    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    ranked = _cents_grid(df, score_col, label_col).select(
+        "v", "c", "pos",
+        (
+            F.coalesce(F.sum("c").over(w), F.lit(0.0))
+            + (F.col("c") + 1) / 2
+        ).alias("midrank"),
+    )
+    agg = ranked.agg(
+        F.sum(F.col("pos") * F.col("midrank")).alias("rpos"),
+        F.sum("pos").alias("npos"),
+        F.sum(F.col("c") - F.col("pos")).alias("nneg"),
+    )
+    auc = (
+        F.col("rpos") - F.col("npos") * (F.col("npos") + 1) / 2
+    ) / (F.col("npos") * F.col("nneg"))
+    return agg, auc
+
+
+def _confusion_sweep(df: DataFrame, score_col, label_col) -> DataFrame:
+    """The confusion counts of 'positive iff score >= v/100' at every
+    cutoff ``v`` of the cents grid: ``(v, tp, fp, n, p)``, with the
+    grid's row and positive totals ``n``/``p`` on every row."""
+    g = _cents_grid(df, score_col, label_col)
+    tot = g.agg(F.sum("c").alias("n"), F.sum("pos").alias("p"))
+    # suffix sums via whole-partition-minus-exclusive-prefix: Spark
+    # evaluates an unboundedFollowing frame by re-aggregating the
+    # suffix for EVERY row (O(grid^2) — ~6 s on the 17.8k-cent sf0.1
+    # grid); the whole-partition frame is computed once and the
+    # prefix frame is incremental, so this is O(grid) — and exact,
+    # because the summands are integer counts in doubles.
+    wall = Window.orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    wpre = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    _neg = F.col("c") - F.col("pos")
+    return g.select(
+        "v",
+        (F.sum("pos").over(wall)
+         - F.coalesce(F.sum("pos").over(wpre), F.lit(0.0))).alias("tp"),
+        (F.sum(_neg).over(wall)
+         - F.coalesce(F.sum(_neg).over(wpre), F.lit(0.0))).alias("fp"),
+    ).crossJoin(tot)
+
+
 def funnel_stages(
     df: DataFrame,
     steps: list[str],
@@ -151,17 +233,7 @@ def ewma_smooth(
     x_i`` is what an oracle replays; fold-vs-closed-form float drift
     is ~1e-14 relative, far under the compare's rounding.
     """
-    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("o"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("_pts")
-    )
-    xs = F.transform("_pts", lambda p: p["x"])
+    per_key, xs = _ordered_series(df, key_col, order_col, value_col)
     ewma = F.aggregate(
         F.slice(xs, 2, F.greatest(F.size(xs) - 1, F.lit(0))),
         F.element_at(xs, 1),
@@ -357,17 +429,7 @@ def holt_smooth(
     feed is a bucketed series, state O(points-per-key).
     """
     a, b = float(alpha), float(beta)
-    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("o"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("_pts")
-    )
-    xs = F.transform("_pts", lambda p: p["x"])
+    per_key, xs = _ordered_series(df, key_col, order_col, value_col)
     seed = F.struct(
         F.element_at(xs, 1).alias("l"), F.lit(0.0).alias("t")
     )
@@ -3658,17 +3720,7 @@ def page_hinkley(
     bounded minute-bucket series.  An oracle replays the identical
     IEEE fold via ``list_reduce`` over the same state array.
     """
-    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("o"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("_pts")
-    )
-    xs = F.transform("_pts", lambda p: p["x"])
+    per_key, xs = _ordered_series(df, key_col, order_col, value_col)
     zero = F.array(*[F.lit(0.0)] * 6)
 
     def step(acc, x):
@@ -4002,17 +4054,7 @@ def holt_winters_seasonal(
     accumulator (the holt_smooth DuckDB-quirk workaround, generalized).
     One grouped pass; state O(season) per key.
     """
-    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("o"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("_pts")
-    )
-    xs = F.transform("_pts", lambda p: p["x"])
+    per_key, xs = _ordered_series(df, key_col, order_col, value_col)
     zero = F.array(*[F.lit(0.0)] * (2 + season))
     a, b, g = float(alpha), float(beta), float(gamma)
 
@@ -4136,17 +4178,7 @@ def effective_sample_size(
     not): mean, variance and the lag-1 cross sum fold left-to-right in
     the same order on any engine.  ``n_eff`` clamps to [1, n].
     """
-    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("o"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("_pts")
-    )
-    xs = F.transform("_pts", lambda p: p["x"])
+    per_key, xs = _ordered_series(df, key_col, order_col, value_col)
     n = F.size(xs).cast("double")
     sx = F.aggregate(xs, F.lit(0.0), lambda a, x: a + x)
     mean = sx / n
@@ -4366,18 +4398,8 @@ def nelson_rules(
     rule fold tracks the signed run lengths.  Bounded by the bucket
     count per key.
     """
-    per_key = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("o"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("_pts")
-    )
+    per_key, xs = _ordered_series(df, key_col, order_col, value_col)
     per_key = per_key.filter(F.size("_pts") >= 3)
-    xs = F.transform("_pts", lambda e: e["x"])
     n = F.size(xs).cast("double")
     sx = F.aggregate(xs, F.lit(0.0), lambda a, x: a + x)
     # MATERIALIZE centerline/sigma as columns before the rule fold:
@@ -13403,29 +13425,7 @@ def roc_auc_rank(
     sum — rank machinery never touches raw rows, same pattern as the
     repo's Brunner-Munzel/Jonckheere.  Emits AUC and Gini (2AUC-1).
     """
-    g = df.select(
-        F.round(score_col.cast("double") * 100).cast("long").alias("v"),
-        label_col.cast("double").alias("y"),
-    ).groupBy("v").agg(
-        F.count(F.lit(1)).cast("double").alias("c"),
-        F.sum("y").alias("pos"),
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = g.select(
-        "v", "c", "pos",
-        (
-            F.coalesce(F.sum("c").over(w), F.lit(0.0))
-            + (F.col("c") + 1) / 2
-        ).alias("midrank"),
-    )
-    agg = ranked.agg(
-        F.sum(F.col("pos") * F.col("midrank")).alias("rpos"),
-        F.sum("pos").alias("npos"),
-        F.sum(F.col("c") - F.col("pos")).alias("nneg"),
-    )
-    auc = (
-        F.col("rpos") - F.col("npos") * (F.col("npos") + 1) / 2
-    ) / (F.col("npos") * F.col("nneg"))
+    agg, auc = _midrank_auc(df, score_col, label_col)
     return agg.select(
         F.col("npos").cast("bigint").alias("n_pos"),
         F.col("nneg").cast("bigint").alias("n_neg"),
@@ -14844,34 +14844,7 @@ def mcc_best_threshold(
     classifier_threshold_eval (F1 favors the majority class; MCC
     does not).
     """
-    g = df.select(
-        F.round(score_col.cast("double") * 100).cast("long").alias("v"),
-        label_col.cast("double").alias("y"),
-    ).groupBy("v").agg(
-        F.count(F.lit(1)).cast("double").alias("c"),
-        F.sum("y").alias("pos"),
-    )
-    tot = g.agg(
-        F.sum("c").alias("n"), F.sum("pos").alias("p")
-    )
-    # suffix sums via whole-partition-minus-exclusive-prefix: Spark
-    # evaluates an unboundedFollowing frame by re-aggregating the
-    # suffix for EVERY row (O(grid^2) — ~6 s on the 17.8k-cent sf0.1
-    # grid); the whole-partition frame is computed once and the
-    # prefix frame is incremental, so this is O(grid) — and exact,
-    # because the summands are integer counts in doubles.
-    wall = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    wpre = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    _neg = F.col("c") - F.col("pos")
-    cum = g.select(
-        "v",
-        (F.sum("pos").over(wall)
-         - F.coalesce(F.sum("pos").over(wpre), F.lit(0.0))).alias("tp"),
-        (F.sum(_neg).over(wall)
-         - F.coalesce(F.sum(_neg).over(wpre), F.lit(0.0))).alias("fp"),
-    ).crossJoin(tot).select(
+    cum = _confusion_sweep(df, score_col, label_col).select(
         "v", "tp", "fp",
         (F.col("p") - F.col("tp")).alias("fn"),
         (F.col("n") - F.col("p") - F.col("fp")).alias("tn"),
@@ -16077,42 +16050,20 @@ def auc_hanley_ci(
     the bare roc_auc_rank entry leaves out, from the SAME bounded
     cents-grid midrank machinery.
     """
-    g = df.select(
-        F.round(score_col.cast("double") * 100).cast("long").alias("v"),
-        label_col.cast("double").alias("y"),
-    ).groupBy("v").agg(
-        F.count(F.lit(1)).cast("double").alias("c"),
-        F.sum("y").alias("pos"),
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = g.select(
-        "v", "c", "pos",
-        (
-            F.coalesce(F.sum("c").over(w), F.lit(0.0))
-            + (F.col("c") + 1) / 2
-        ).alias("midrank"),
-    )
-    a = ranked.agg(
-        F.sum(F.col("pos") * F.col("midrank")).alias("rpos"),
-        F.sum("pos").alias("np"),
-        F.sum(F.col("c") - F.col("pos")).alias("nn"),
-    )
-    auc = (
-        F.col("rpos") - F.col("np") * (F.col("np") + 1) / 2
-    ) / (F.col("np") * F.col("nn"))
+    a, auc = _midrank_auc(df, score_col, label_col)
     q1 = auc / (2 - auc)
     q2 = 2 * auc * auc / (1 + auc)
     se = F.sqrt(
         (
             auc * (1 - auc)
-            + (F.col("np") - 1) * (q1 - auc * auc)
-            + (F.col("nn") - 1) * (q2 - auc * auc)
+            + (F.col("npos") - 1) * (q1 - auc * auc)
+            + (F.col("nneg") - 1) * (q2 - auc * auc)
         )
-        / (F.col("np") * F.col("nn"))
+        / (F.col("npos") * F.col("nneg"))
     )
     return a.select(
-        F.col("np").cast("bigint").alias("n_pos"),
-        F.col("nn").cast("bigint").alias("n_neg"),
+        F.col("npos").cast("bigint").alias("n_pos"),
+        F.col("nneg").cast("bigint").alias("n_neg"),
         F.round(auc, 6).alias("auc"),
         F.round(se, 6).alias("se_hanley"),
         F.round(F.greatest(auc - z * se, F.lit(0.0)), 6).alias("ci_lo"),
@@ -16805,32 +16756,7 @@ def decision_curve_net_benefit(
     cumulative windows on the bounded cents grid (the MCC-sweep
     machinery); thresholds are a bounded literal list.
     """
-    g = df.select(
-        F.round(score_col.cast("double") * 100).cast("long").alias("v"),
-        label_col.cast("double").alias("y"),
-    ).groupBy("v").agg(
-        F.count(F.lit(1)).cast("double").alias("c"),
-        F.sum("y").alias("pos"),
-    )
-    tot = g.agg(F.sum("c").alias("n"), F.sum("pos").alias("p"))
-    # suffix sums via whole-partition-minus-exclusive-prefix: Spark
-    # evaluates an unboundedFollowing frame by re-aggregating the
-    # suffix for EVERY row (O(grid^2) — ~6 s on the 17.8k-cent sf0.1
-    # grid); the whole-partition frame is computed once and the
-    # prefix frame is incremental, so this is O(grid) — and exact,
-    # because the summands are integer counts in doubles.
-    wall = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    wpre = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    _neg = F.col("c") - F.col("pos")
-    cum = g.select(
-        "v",
-        (F.sum("pos").over(wall)
-         - F.coalesce(F.sum("pos").over(wpre), F.lit(0.0))).alias("tp"),
-        (F.sum(_neg).over(wall)
-         - F.coalesce(F.sum(_neg).over(wpre), F.lit(0.0))).alias("fp"),
-    ).crossJoin(tot)
+    cum = _confusion_sweep(df, score_col, label_col)
     spark = df.sparkSession
     th = spark.range(len(thresholds)).select(
         F.element_at(
@@ -17486,32 +17412,7 @@ def youden_j_threshold(
     training one.  Same cents-grid confusion machinery, rank-1
     argmax with 9dp rounding.
     """
-    g = df.select(
-        F.round(score_col.cast("double") * 100).cast("long").alias("v"),
-        label_col.cast("double").alias("y"),
-    ).groupBy("v").agg(
-        F.count(F.lit(1)).cast("double").alias("c"),
-        F.sum("y").alias("pos"),
-    )
-    tot = g.agg(F.sum("c").alias("n"), F.sum("pos").alias("p"))
-    # suffix sums via whole-partition-minus-exclusive-prefix: Spark
-    # evaluates an unboundedFollowing frame by re-aggregating the
-    # suffix for EVERY row (O(grid^2) — ~6 s on the 17.8k-cent sf0.1
-    # grid); the whole-partition frame is computed once and the
-    # prefix frame is incremental, so this is O(grid) — and exact,
-    # because the summands are integer counts in doubles.
-    wall = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    wpre = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    _neg = F.col("c") - F.col("pos")
-    cum = g.select(
-        "v",
-        (F.sum("pos").over(wall)
-         - F.coalesce(F.sum("pos").over(wpre), F.lit(0.0))).alias("tp"),
-        (F.sum(_neg).over(wall)
-         - F.coalesce(F.sum(_neg).over(wpre), F.lit(0.0))).alias("fp"),
-    ).crossJoin(tot)
+    cum = _confusion_sweep(df, score_col, label_col)
     sens = F.col("tp") / F.col("p")
     spec = 1 - F.col("fp") / (F.col("n") - F.col("p"))
     jst = F.round(sens + spec - 1, 9)

@@ -14,15 +14,16 @@ reference's native shape:
   the batch job, which leaves out only the repartition and the sort
   (Structured Streaming rejects the sort; :func:`write_stream_sinks`
   orders each epoch) — one logical plan, two execution modes,
-* watermarked 1-minute windowed counts (the count connector under late
-  data; watermark bounds state like the batch processor's timeout),
+* watermarked 1-minute windowed counts (the batch job's count
+  connector under late data; the watermark bounds state like the
+  batch processor's timeout),
 * ``foreachBatch`` fan-out appends into the same SnapshotCatalog sink
   tables (idempotent per epoch — the HEC exporter's retry-safe queue),
 * :func:`conversation_sessions` — a custom stateful operator via
   ``applyInPandasWithState``: per-conversation running counters with
-  idle-timeout finalization (the discovery receiver's correlation
-  state, endpoint_tracker.go:243-293, is the reference's analog of
-  keyed session state).
+  event-time idle-timeout finalization (the discovery receiver's
+  correlation state, endpoint_tracker.go:243-293, is the reference's
+  analog of keyed session state).
 """
 
 from __future__ import annotations
@@ -31,8 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..aggregate import N_CONV_BUCKETS, conv_bucket
+from ..aggregate import count_connector
 from ..schema import TRANSCRIPTS_SCHEMA
+
+# Event-time lateness windowed_counts and conversation_sessions
+# accept: a turn older than (max event time seen - WATERMARK) is
+# dropped, and state keyed on older time is finalized and evicted.
+WATERMARK = "10 minutes"
 
 
 def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -45,28 +51,14 @@ def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def windowed_counts(
-    routed: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-    n_buckets: int = N_CONV_BUCKETS,
-) -> DataFrame:
-    """Count-connector aggregation with late-data bounds.
+def windowed_counts(routed: DataFrame) -> DataFrame:
+    """The batch job's :func:`~sparkcollector.aggregate.count_connector`
+    grouping over a routed stream, with late-data bounds.
 
     The watermark caps state: windows older than (max event time −
-    watermark) finalize and evict — the streaming analog of the batch
-    processor's flush timeout."""
-    return (
-        routed.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window).start.alias("window_start"),
-            F.col("sink"),
-            conv_bucket(n_buckets=n_buckets).alias("conv_bucket"),
-            "role",
-            "tool",
-        )
-        .agg(F.count("*").alias("n"))
-    )
+    ``WATERMARK``) finalize and evict — the streaming analog of the
+    batch processor's flush timeout."""
+    return count_connector(routed.withWatermark("ts", WATERMARK))
 
 
 def write_stream_sinks(
@@ -140,10 +132,16 @@ def conversation_sessions(
     """Keyed running session state per conversation.
 
     ``applyInPandasWithState`` keeps (n_turns, n_errors, last_ts) per
-    conv_id; each micro-batch emits the updated totals, and a
-    conversation idle past the timeout emits a final ``closed`` row and
-    drops its state (bounded memory at 10^12-turn scale: state is one
-    tiny tuple per LIVE conversation, not per turn).
+    conv_id; each micro-batch emits the updated totals.  The idle clock
+    is EVENT time behind the ``WATERMARK`` that :func:`windowed_counts`
+    uses: a conversation closes once event time (the watermark) passes
+    its last turn plus ``idle_timeout_ms``, emits a final ``closed``
+    row and drops its state (bounded memory at 10^12-turn scale: state
+    is one tiny tuple per LIVE conversation, not per turn).  Turns
+    later than the watermark are dropped.  An event-time clock gives
+    the same sessions on every replay, and, unlike pending
+    processing-time timeouts (see :func:`stream_tail_sample`), lets an
+    ``availableNow`` query end once its input is consumed.
     """
     import pandas as pd  # noqa: F401
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -168,18 +166,25 @@ def conversation_sessions(
             if pd.notna(ts_max):
                 last_ts = max(last_ts, ts_max.timestamp())
         state.update((n_turns, n_errors, last_ts))
-        state.setTimeoutDuration(idle_timeout_ms)
+        state.setTimeoutTimestamp(
+            max(state.getCurrentWatermarkMs(), int(last_ts * 1000))
+            + idle_timeout_ms
+        )
         yield pd.DataFrame(
             [{"conv_id": conv_id, "n_turns": n_turns,
               "n_errors": n_errors, "closed": False}]
         )
 
-    return turns.groupBy("conv_id").applyInPandasWithState(
-        update,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return (
+        turns.withWatermark("ts", WATERMARK)
+        .groupBy("conv_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=SESSION_OUTPUT_SCHEMA,
+            stateStructType=SESSION_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 

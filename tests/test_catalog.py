@@ -5,6 +5,8 @@ this sandbox has no network; on a real cluster submit with
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from sparkcollector.catalog import (
@@ -122,13 +124,17 @@ class _FakeCatalogAPI:
 
 
 class _FakeSession:
-    """Answers the metadata queries IcebergCatalog makes."""
+    """Answers the metadata queries IcebergCatalog makes.  ``entries``
+    are the table's manifest entries as (snapshot_id, status, path,
+    rows); by default the commit ``snapshot_id`` added one file."""
 
-    def __init__(self, rec, exists=True, snapshot_id=991, added=5):
+    def __init__(self, rec, exists=True, snapshot_id=991, added=5,
+                 entries=None):
         self.rec = rec
         self.catalog = _FakeCatalogAPI(exists)
         self._snapshot_id = snapshot_id
         self._added = added
+        self._entries = entries or [(snapshot_id, 1, "f1.parquet", added)]
 
     def sql(self, q):
         self.rec.calls.append(("sql", q))
@@ -138,9 +144,18 @@ class _FakeSession:
                           summary={"added-records": str(self._added),
                                    "added-files-size": "640"})]
             )
-        if ".files" in q:
+        if ".entries" in q:
+            sid = int(re.search(r"snapshot_id = (\d+)", q).group(1))
+            status = int(re.search(r"status = (\d+)", q).group(1))
             return _FakeQuery(
-                [_FakeRow(path="f1.parquet", rows=self._added, partition=None)]
+                [_FakeRow(path=p, rows=n, partition=None)
+                 for s, st, p, n in self._entries
+                 if s == sid and st == status]
+            )
+        if ".files" in q:  # every live file, whichever commit added it
+            return _FakeQuery(
+                [_FakeRow(path=p, rows=n, partition=None)
+                 for _, st, p, n in self._entries if st != 2]
             )
         if q.startswith("SHOW TBLPROPERTIES"):
             return _FakeQuery(
@@ -159,11 +174,11 @@ class _FakeDF:
         return _FakeWriterV2(self._rec)
 
 
-def _patched(monkeypatch, exists):
+def _patched(monkeypatch, exists, **session_kw):
     import sparkcollector.catalog as cat_mod
 
     rec = _Recorder()
-    sess = _FakeSession(rec, exists=exists)
+    sess = _FakeSession(rec, exists=exists, **session_kw)
     monkeypatch.setattr(cat_mod, "iceberg_available", lambda s: True)
     return rec, sess
 
@@ -185,6 +200,19 @@ def test_iceberg_append_existing_table_appends(monkeypatch):
     assert snap.metrics["rows"] == 5 and snap.metrics["epoch"] == 3
     assert snap.metrics["bytes"] == 640  # the summary's added-files-size
     assert snap.files == [{"path": "f1.parquet", "rows": 5}]
+
+
+def test_iceberg_append_lists_only_this_commits_files(monkeypatch):
+    """An append to a table that already holds files reports only the
+    files its own snapshot added, so per-sink row sums count this
+    commit's rows and not the table's history."""
+    _, sess = _patched(monkeypatch, exists=True, entries=[
+        (990, 0, "old.parquet", 7),   # an earlier commit's live file
+        (991, 1, "new.parquet", 5),   # added by this commit (id 991)
+    ])
+    snap = IcebergCatalog("local.db.t").append(_FakeDF(sess))
+    assert snap.files == [{"path": "new.parquet", "rows": 5}]
+    assert sum(f["rows"] for f in snap.files) == snap.metrics["rows"]
 
 
 def test_iceberg_append_new_table_creates_partitioned(monkeypatch):

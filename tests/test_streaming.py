@@ -56,6 +56,10 @@ def test_stream_matches_batch_sinks(
 
 
 def test_windowed_counts_stream(spark, stream_input, turns_df, tmp_path):
+    """The streaming counts are the batch job's agg_counts rows:
+    ``count_connector`` over the same compiled pipeline."""
+    from sparkcollector.aggregate import count_connector
+
     routed = compile_pipeline()(stream_transcripts(spark, stream_input))
     counts = windowed_counts(routed)
     q = (
@@ -66,9 +70,22 @@ def test_windowed_counts_stream(spark, stream_input, turns_df, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    total = spark.sql("select sum(n) as t from wc_test").collect()[0]["t"]
-    assert total == turns_df.count()
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    got = spark.table("wc_test")
+    want = count_connector(compile_pipeline()(turns_df))
+    assert got.columns == want.columns
+    # the file stream reads ts as TIMESTAMP, the flat batch read as
+    # TIMESTAMP_NTZ: compare window starts as instants in session time
+    want = want.withColumn(
+        "window_start", F.col("window_start").cast("timestamp")
+    )
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert got.agg(F.sum("n")).collect()[0][0] == turns_df.count()
 
 
 def test_conversation_sessions_state(spark, stream_input, turns_pdf, tmp_path):
@@ -82,7 +99,11 @@ def test_conversation_sessions_state(spark, stream_input, turns_pdf, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        ended = q.awaitTermination(180)
+    finally:
+        q.stop()
+    assert ended, "the availableNow session query did not end"
     rows = spark.sql(
         "select conv_id, max(n_turns) as n_turns, max(n_errors) as n_errors "
         "from sess_test group by conv_id"
