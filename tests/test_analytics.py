@@ -5035,41 +5035,6 @@ def test_mcc_threshold_on_separable_scores(spark):
     assert r["fp"] == 0 and r["fn"] == 0
 
 
-def test_sweep_frame_guard_rejects_suffix_frame(spark):
-    """The plan audit's confusion-sweep guard rejects the O(grid^2)
-    ``rowsBetween(0, unboundedFollowing)`` frame and accepts the three
-    sweep operators' plans."""
-    import importlib.util
-    import pathlib
-
-    from pyspark.sql import functions as F
-
-    from sparkcollector.operators.analytics import (
-        decision_curve_net_benefit,
-        mcc_best_threshold,
-        youden_j_threshold,
-    )
-
-    spec = importlib.util.spec_from_file_location(
-        "audit_plans",
-        pathlib.Path(__file__).parent.parent / "scripts" / "audit_plans.py",
-    )
-    audit = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(audit)
-    bad = audit.plan_of(audit.suffix_frame_fixture(spark))
-    assert not audit.no_suffix_frame(bad)
-    df = spark.createDataFrame(
-        [(i / 100.0, i % 2) for i in range(100)], "s double, y int"
-    )
-    s, y = F.col("s"), F.col("y")
-    for out in (
-        mcc_best_threshold(df, s, y),
-        youden_j_threshold(df, s, y),
-        decision_curve_net_benefit(df, s, y, [0.1, 0.5]),
-    ):
-        assert audit.no_suffix_frame(audit.plan_of(out))
-
-
 def test_speaker_dominance_monologue_vs_pingpong(spark):
     from sparkcollector.operators.analytics import speaker_dominance
 
