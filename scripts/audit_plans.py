@@ -268,7 +268,7 @@ def main() -> None:
     from sparkcollector.config import compile_pipeline
     from sparkcollector.session import get_spark
     from sparkcollector.aggregate import count_connector
-    from sparkcollector.queries import queries, transcripts_from_events
+    from sparkcollector.queries import _t, queries, transcripts_from_events
 
     spark = get_spark(app_name="plan-audit", shuffle_partitions=32)
     out: list = []
@@ -317,7 +317,7 @@ def main() -> None:
              and len(m.group(1).split(",")) == 2),
         ],
         out,
-        plan=lambda: spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+        plan=lambda: _t(spark, SF_DIR, "lineitem")
         .filter(F.col("l_quantity") <= 10)
         .select("l_returnflag", "l_quantity"),
     )
@@ -352,7 +352,7 @@ def main() -> None:
     #    The plan is post-localCheckpoint, so inspect the full query.
     from sparkcollector.operators.dedup import minhash_lsh_pairs
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = _t(spark, SF_DIR, "documents")
     all_ok &= audit(
         "minhash_verify_join",
         [
@@ -394,7 +394,7 @@ def main() -> None:
 
     # 9. each invariant fires on its bad fixture, so the passes below
     #    are not vacuous.
-    scan = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    scan = _t(spark, SF_DIR, "lineitem")
     for inv, desc, df in bad_fixtures(spark, scan):
         broken, _ = broken_invariants(df)
         all_ok &= broken == {inv}

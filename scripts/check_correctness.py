@@ -16,13 +16,11 @@ import duckdb
 
 sys.path.insert(0, ".")
 
+from sparkcollector.schema import SF_TABLE_SCHEMAS  # noqa: E402
+
 _POS = [a for a in sys.argv[1:] if not a.startswith("--")]
 SF_DIR = _POS[0] if _POS else "/root/testdata/sf0.01"
 ONLY = _POS[1].split(",") if len(_POS) > 1 else None
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def canon(v) -> str:
@@ -96,7 +94,7 @@ def main() -> None:
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
-    for t in TABLES:
+    for t in SF_TABLE_SCHEMAS:
         con.sql(
             f"create view {t} as select * from '{SF_DIR}/{t}.parquet'"
         )

@@ -24,10 +24,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from sparkcollector.schema import SF_TABLE_SCHEMAS  # noqa: E402
 
 
 def canon_hash(rows, cols) -> str:
@@ -55,7 +52,7 @@ def main() -> None:
 
     if do_duck:
         con = duckdb.connect()
-        for t in TABLES:
+        for t in SF_TABLE_SCHEMAS:
             con.sql(
                 f"create view {t} as select * from '{sf_dir}/{t}.parquet'"
             )

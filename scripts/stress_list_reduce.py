@@ -27,10 +27,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from sparkcollector.schema import SF_TABLE_SCHEMAS  # noqa: E402
 
 
 def row_hash(tbl) -> tuple[str, int]:
@@ -57,7 +54,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     con = duckdb.connect()
-    for t in TABLES:
+    for t in SF_TABLE_SCHEMAS:
         con.sql(f"create view {t} as select * from '{sf_dir}/{t}.parquet'")
 
     targets = [

@@ -26,10 +26,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from sparkcollector.schema import SF_TABLE_SCHEMAS  # noqa: E402
 
 
 def scan(tbl) -> dict[str, list[str]]:
@@ -59,7 +56,7 @@ def main() -> None:
     hits = []
     for sf_dir in sf_dirs:
         con = duckdb.connect()
-        for t in TABLES:
+        for t in SF_TABLE_SCHEMAS:
             con.sql(
                 f"create view {t} as select * from '{sf_dir}/{t}.parquet'"
             )

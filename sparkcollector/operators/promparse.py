@@ -1549,6 +1549,57 @@ def grok_parse(
     return df.select("*", ok.alias("well_formed"), *cols)
 
 
+def _xmlkv_kernel(root, attrs, elements):
+    """The ``xmlkv_parse`` kernel over one Arrow batch: ``kern(xml, ok)``
+    takes the ``xml`` strings and the Catalyst-side well-formed gate
+    ``ok`` and returns one row of ``a_<attr>``/``e_<element>``/
+    ``n_children`` per input row.  A row whose gate is false or NULL
+    (``None``, or ``pd.NA`` in a nullable ``boolean`` Series) gets
+    all-NULL fields.  ``kern`` refers to no module global, so Spark
+    ships it to the Python workers by value and they need not import
+    this package."""
+
+    def kern(xml, ok):
+        import xml.etree.ElementTree as ET
+
+        import pandas as pd
+
+        n = len(xml)
+        out: dict[str, list] = {f"a_{a}": [None] * n for a in attrs}
+        out.update({f"e_{e}": [None] * n for e in elements})
+        out["n_children"] = [None] * n
+        for i in range(n):
+            v = ok.iat[i]
+            if pd.isna(v) or not v:
+                continue
+            try:
+                r = ET.fromstring(xml.iat[i])
+            except ET.ParseError:
+                r = None
+            if r is None or r.tag != root:
+                # XPath on a different/unparseable document element:
+                # empty nodesets stringify to "" for attrs, no child
+                # elements.
+                for a in attrs:
+                    out[f"a_{a}"][i] = ""
+                out["n_children"][i] = 0
+                continue
+            for a in attrs:
+                out[f"a_{a}"][i] = r.get(a, "")
+            for e in elements:
+                el = r.find(e)
+                if el is not None:
+                    txt = "".join(el.itertext())
+                    if txt != "":
+                        out[f"e_{e}"][i] = txt
+            out["n_children"][i] = sum(
+                1 for c in r if isinstance(c.tag, str)
+            )
+        return pd.DataFrame(out)
+
+    return kern
+
+
 def xmlkv_parse(
     df: DataFrame,
     xml_col: str = "xml",
@@ -1585,39 +1636,7 @@ def xmlkv_parse(
         ", ".join(f"`{f}` string" for f in fields) + ", n_children bigint"
     )
 
-    def _kern(xml, ok):
-        import xml.etree.ElementTree as ET
-
-        n = len(xml)
-        out: dict[str, list] = {f: [None] * n for f in fields}
-        out["n_children"] = [None] * n
-        for i in range(n):
-            if not ok.iat[i]:
-                continue
-            try:
-                r = ET.fromstring(xml.iat[i])
-            except ET.ParseError:
-                r = None
-            if r is None or r.tag != root:
-                # XPath on a different/unparseable document element:
-                # empty nodesets stringify to "" for attrs, no child
-                # elements.
-                for a in attrs:
-                    out[f"a_{a}"][i] = ""
-                out["n_children"][i] = 0
-                continue
-            for a in attrs:
-                out[f"a_{a}"][i] = r.get(a, "")
-            for e in elements:
-                el = r.find(e)
-                if el is not None:
-                    txt = "".join(el.itertext())
-                    if txt != "":
-                        out[f"e_{e}"][i] = txt
-            out["n_children"][i] = sum(
-                1 for c in r if isinstance(c.tag, str)
-            )
-        return pd.DataFrame(out)
+    _kern = _xmlkv_kernel(root, attrs, elements)
 
     # real (non-string) hints: `from __future__ import annotations`
     # would stringify inline ones past what pyspark's resolver can

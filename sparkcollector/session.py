@@ -7,6 +7,19 @@ internal/settings/settings.go:68-70).  On Spark those concerns map to
 executor memory, AQE, and Arrow batch sizing — set once here so every
 entrypoint (tests, bench, spark-submit job) gets the same plan-shaping
 configuration.
+
+Warm sessions run many registry queries one after another (the test
+suite, the oracle sweep, the plan audit, a benchmark pass), and every
+query's whole-stage and projection code is a class Janino compiles.
+Spark keeps compiled classes in an LRU cache of
+``spark.sql.codegen.cache.maxEntries`` entries, 100 by default, split
+into four segments.  Six registry queries alone need about 95 classes,
+so at the default each pass evicts classes the next pass needs and
+recompiles about 30 of them.  ``CODEGEN_CACHE_ENTRIES`` is ten times
+that working set; at about 90 KB of metaspace per generated class it
+caps the cache near 90 MB.  It is a static conf: it takes effect only
+when ``get_spark`` creates the session, not when it returns one that
+already exists.
 """
 
 from __future__ import annotations
@@ -19,6 +32,9 @@ from pyspark.sql import SparkSession
 # of ~1 KiB transcript text a batch is ~10 MiB — safe at 100s of
 # concurrent tasks per executor, large enough to amortize Arrow IPC.
 ARROW_MAX_RECORDS_PER_BATCH = 10_000
+
+# Generated classes kept per JVM (see the module docstring).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _mem_total_gib() -> float:
@@ -142,6 +158,7 @@ def get_spark(
             os.environ.get("SPARK_LOCAL_DIRS", _default_local_dir()),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -12,10 +12,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from sparkcollector.schema import SF_TABLE_SCHEMAS
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,7 +20,7 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def con():
     c = duckdb.connect()
-    for t in TABLES:
+    for t in SF_TABLE_SCHEMAS:
         c.sql(f"create view {t} as select * from '{SF_DIR}/{t}.parquet'")
     return c
 

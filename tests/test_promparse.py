@@ -810,6 +810,26 @@ def test_xmlkv_parse_attrs_elements_gate(spark):
     assert got[4]["a_id"] == "" and got[4]["e_host"] is None
 
 
+def test_xmlkv_kernel_skips_false_and_null_gates():
+    import numpy as np
+    import pandas as pd
+
+    from sparkcollector.operators.promparse import _xmlkv_kernel
+
+    kern = _xmlkv_kernel("event", ("id", "type"), ("host",))
+    xml = pd.Series(['<event id="7" type="t"><host>h</host></event>'] * 4)
+    parsed = {"a_id": "7", "a_type": "t", "e_host": "h", "n_children": 1}
+    skipped = dict.fromkeys(parsed)
+    for ok in (
+        pd.Series([True, pd.NA, False, True], dtype="boolean"),
+        pd.Series([np.True_, None, np.False_, np.True_], dtype=object),
+        pd.Series([True, False, False, True]),
+    ):
+        got = kern(xml, ok)
+        got = got.astype(object).where(got.notna(), None)
+        assert got.to_dict("records") == [parsed, skipped, skipped, parsed]
+
+
 def test_docker_json_parse_fields_and_deadletter(spark):
     from sparkcollector.operators.promparse import docker_json_parse
 
